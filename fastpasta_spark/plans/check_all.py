@@ -17,13 +17,20 @@ pass, and no second scan exists; BENCH/REFS_INPASS.md):
   stage 3  branches on the (much smaller) pass output:
              'v' rows  -> violation table
              's' rows  -> stats merge (partial+final agg)
-             'k' rows  -> uniqueness (groupBy count>1 + HLL totals)
+             'k' rows  -> uniqueness (groupBy count>1 + HLL totals);
+                          the persisted groups (one row per distinct
+                          doc_id, NULL included) are also the per-doc
+                          verdict universe — no second key shuffle
              kind mix  -> chi-square drift vs golden profile
            (E110 referential rows are 'v' rows: the pass checks refs
             in-scan against a broadcast media-id set — no re-scan; the
             columnar media_ref_rows form below serves the standalone
             dangling_refs driver query)
-  stage 4  metrics assembly + error-code rollup (G6 analogue)
+  stage 4  metrics assembly + error-code rollup (G6 analogue), persisted
+           ONCE as a single partition: the report, write_stats,
+           golden_diff and custom checks all read that table (the
+           reference builds its stats once and then reports, writes and
+           validates them, controller.rs:152-179)
 
 Violations sort by (doc_id, offset, check_code) — the reference sorts
 error rows by memory position before display (error_stats.rs:36-47).
@@ -44,14 +51,15 @@ from fastpasta_spark.operators.sequence import sequence_pass, split_sequence_out
 @dataclass
 class CheckResult:
     violations: DataFrame  # VIOLATION_SCHEMA, sorted
-    metrics: DataFrame     # (name, value)
+    metrics: DataFrame     # (name, value), persisted: read it, never re-derive
     passed: DataFrame      # (doc_id, verdict) per-doc pass/fail
-    # internal persisted frames (pass output, violation union). They are
-    # ALSO registered with the session cache registry (tracked_persist),
-    # so either release path works: callers that run MANY check_all's in
-    # one session (run_failfast slices, resumable loops) call release()
-    # per result; a bare caller frees everything at once with
-    # functions.cache.release_tracked(). Double-release is a no-op.
+    # persisted frames (pass output, violation union, uniqueness groups,
+    # metrics table). They are ALSO registered with the session cache
+    # registry (tracked_persist), so either release path works: callers
+    # that run MANY check_all's in one session (run_failfast slices,
+    # resumable loops) call release() per result; a bare caller frees
+    # everything at once with functions.cache.release_tracked().
+    # Double-release is a no-op.
     _cached: tuple = ()
     # release closures beyond unpersist (the media-id broadcast): run by
     # release() AND deregistered, same dead-entry rationale as _cached
@@ -85,8 +93,12 @@ def _uniqueness_branch(
     round-8 re-measured ALTERNATING at 32 cores (quiet reps): persisted
     2.55-2.86s vs re-evaluated 3.34-3.52s end-to-end check_all, so the
     violations action and the metrics action now share one key shuffle
-    instead of paying it twice. The persist registers with the session
-    cache registry AND is returned so check_all adds it to
+    instead of paying it twice. The groups hold one row per distinct
+    doc_id, NULL included, so they are also the per-doc verdict universe
+    (check_all's `passed` anti-joins the failing keys against them
+    instead of shuffling the 'k' rows a second time) — the declared key
+    domain of the uniqueness constraint. The persist registers with the
+    session cache registry AND is returned so check_all adds it to
     CheckResult._cached (slice loops release per result).
     """
     from fastpasta_spark.functions.cache import tracked_persist
@@ -121,6 +133,14 @@ def _uniqueness_branch(
         "'doc_id_distinct_hll', CAST(hll AS DOUBLE)) AS (name, value)"
     )
     return viol, metrics, grouped
+
+
+def _distinct_docs():
+    """Distinct doc_ids in an aggregate, NULL counted as its own key:
+    countDistinct skips NULL, so one is added when any NULL row exists
+    (max of an empty group is NULL, hence the coalesce)."""
+    return F.countDistinct("doc_id") + F.coalesce(
+        F.max(F.col("doc_id").isNull().cast("int")), F.lit(0))
 
 
 def media_ref_rows(docs: DataFrame) -> DataFrame:
@@ -389,8 +409,7 @@ def check_all(
     # (error_stats.rs:13-55 unique_error_codes + staves_with_errors)
     code_counts = violations.groupBy("check_code").agg(
         F.count(F.lit(1)).alias("n"),
-        F.countDistinct(F.coalesce(F.col("doc_id"), F.lit("\x00"))
-                        ).alias("docs_affected"),
+        _distinct_docs().alias("docs_affected"),
     ).select(
         F.expr("stack(2, "
                "concat('error_count_', check_code), CAST(n AS DOUBLE), "
@@ -405,37 +424,36 @@ def check_all(
     # errors" analogue): how many distinct docs carry a real error, and
     # how many distinct codes fired
     attrib = violations.filter(F.col("severity") != S.SEV_WARNING).agg(
-        F.countDistinct(F.coalesce(F.col("doc_id"), F.lit("\x00"))
-                        ).cast("double").alias("d"),
+        _distinct_docs().cast("double").alias("d"),
         F.countDistinct("check_code").cast("double").alias("c"),
     ).selectExpr(
         "stack(2, 'docs_with_errors', d, 'error_codes_distinct', c)"
         " AS (name, value)"
     )
 
-    metrics = (stats.unionByName(uniq_metrics).unionByName(code_counts)
-               .unionByName(total).unionByName(attrib))
+    # O(codes + stats) rows: one partition, persisted, so every consumer
+    # (report, write_stats, golden_diff, custom checks) reads the finished
+    # table instead of re-running the five rollups
+    metrics = tracked_persist(
+        stats.unionByName(uniq_metrics).unionByName(code_counts)
+        .unionByName(total).unionByName(attrib).coalesce(1))
 
-    # per-doc verdict: docs with no ERROR/FATAL violation pass. NULL
-    # doc_ids coalesce to a sentinel for the join — a NULL key never
-    # matches a left_anti join, so a doc that produced an E10 ERROR
-    # would otherwise be reported PASS. (All NULL-keyed docs collapse
-    # into the one sentinel row — NULL keys are indistinguishable.)
-    sent = "\x00null_doc_id"
-    key_of = F.coalesce(F.col("doc_id"), F.lit(sent)).alias("doc_id")
+    # per-doc verdict: docs with no ERROR/FATAL violation pass. The
+    # universe is the persisted uniqueness groups (one row per distinct
+    # doc_id, NULL included); the anti-join is null-safe so a NULL doc_id
+    # that produced an E10 ERROR is not reported PASS (a plain equality
+    # never matches NULL keys). All NULL-keyed docs share one row — NULL
+    # keys are indistinguishable.
     failed = violations.filter(
         F.col("severity") != S.SEV_WARNING
-    ).select(key_of).distinct()
-    passed = keys.select(key_of).distinct().join(
-        failed, "doc_id", "left_anti"
+    ).select(F.col("doc_id").alias("failed_id")).distinct()
+    passed = uniq_grouped.join(
+        failed, F.col("doc_id").eqNullSafe(F.col("failed_id")), "left_anti"
     ).select(
         "doc_id", F.lit("PASS").alias("verdict")
     ).unionByName(
-        failed.select("doc_id", F.lit("FAIL").alias("verdict"))
-    ).select(
-        F.when(F.col("doc_id") == sent, F.lit(None).cast("string"))
-        .otherwise(F.col("doc_id")).alias("doc_id"),
-        "verdict",
+        failed.select(F.col("failed_id").alias("doc_id"),
+                      F.lit("FAIL").alias("verdict"))
     )
 
     if custom is not None and custom.expectations():
@@ -450,8 +468,9 @@ def check_all(
 
     return CheckResult(violations=violations_sorted, metrics=metrics,
                        passed=passed,
-                       _cached=(out, violations, uniq_grouped)
-                       if not work_dir else (violations, uniq_grouped),
+                       _cached=(out, violations, uniq_grouped, metrics)
+                       if not work_dir
+                       else (violations, uniq_grouped, metrics),
                        _extra_release=(vm_bc.unpersist,) if own_bc else ())
 
 
@@ -502,9 +521,8 @@ def run_failfast(
             referential=ref_mode,
         )
         # materialize this slice's (small) violations NOW, then release
-        # the slice's internal caches (fused-pass output + violation
-        # union) — otherwise a clean corpus leaks 2 cached tables per
-        # slice for the session's lifetime. localCheckpoint severs the
+        # the slice's internal caches (CheckResult._cached) — otherwise
+        # a clean corpus leaks them per slice for the session's lifetime. localCheckpoint severs the
         # lineage, so the checkpointed rows survive the unpersist; the
         # checkpoint itself registers with the session cache registry
         # (it backs the RETURNED union, so it is only freed by an

@@ -65,7 +65,7 @@ def test_every_persisting_operator_releases(spark):
 def test_bare_check_all_releases_via_registry(spark):
     """Round-3 verdict #3: a caller that ignores CheckResult.release()
     (e.g. __spark_entry__.entry) must still be able to free check_all's
-    two internal persists through the session registry."""
+    internal persists through the session registry."""
     from fastpasta_spark.plans.check_all import check_all
     from fastpasta_spark.sources.synth import CorpusConfig, corpus_df, media_df
 
@@ -85,6 +85,40 @@ def test_bare_check_all_releases_via_registry(spark):
     res2.release()
     release_tracked()                   # double-release is a no-op
     assert _n_cached(spark) == base
+
+
+def test_metrics_table_cached_once(spark):
+    """res.metrics is persisted: once its first collect has built it,
+    the report, write_stats and golden_diff read the cache (one job, no
+    re-run of the rollups), and both release paths free it."""
+    from fastpasta_spark.plans.check_all import check_all
+    from fastpasta_spark.plans.report import golden_diff, metrics_to_dict
+    from fastpasta_spark.sources.synth import CorpusConfig, corpus_df, media_df
+
+    release_tracked()
+    base = _n_cached(spark)
+    sc = spark.sparkContext
+    cfg = CorpusConfig(n_docs=200, corrupt_per_mille=100)
+    for release in ("result", "registry"):
+        res = check_all(corpus_df(spark, cfg), media_df(spark, cfg))
+        first = metrics_to_dict(res.metrics)
+        assert res.metrics.is_cached
+        group = f"metrics_reread_{release}"
+        sc.setJobGroup(group, group)
+        try:
+            assert metrics_to_dict(res.metrics) == first
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        plan = golden_diff(res.metrics, res.metrics)._jdf.queryExecution()
+        assert "InMemoryTableScan" in plan.executedPlan().toString()
+        assert _n_cached(spark) > base
+        if release == "result":
+            res.release()
+        else:
+            release_tracked()
+        assert _n_cached(spark) == base
+        assert tracked_count() == 0
 
 
 def test_release_is_idempotent_and_safe(spark):
@@ -107,6 +141,10 @@ def test_failfast_and_resumable_release(spark, tmp_path):
 
     viol, done, total = run_failfast(docs, media, max_errors=5, n_slices=4)
     assert viol.count() >= 5 and done < 4
+    # each slice released its own caches: only the per-slice violation
+    # checkpoints backing the returned union and the shared media-id
+    # broadcast are left
+    assert tracked_count() == done + 1
     release_tracked()  # slice checkpoints freed after consumption
     assert _n_cached(spark) == base
 

@@ -71,16 +71,58 @@ def test_metrics_consistent(result):
     assert kind_total == m["spans_seen"]
 
 
+@pytest.fixture(scope="module")
+def hostile(spark):
+    """Clean synth docs plus three ids a string sentinel for NULL would
+    merge: NULL, "\\x00null_doc_id" and "\\x00". All three carry
+    errors; NULL and "\\x00" also share the E12 code."""
+    cfg = CorpusConfig(n_docs=37)
+    docs = corpus_df(spark, cfg)
+    spans = docs.first().spans
+    extra = spark.createDataFrame(
+        [(None, []), ("\x00null_doc_id", spans), ("\x00", [])],
+        S.DOCS_SCHEMA)
+    docs = docs.unionByName(extra)
+    media = media_df(spark, cfg)
+    return docs, media, check_all(docs, media)
+
+
+def _assert_verdicts_partition(docs, res):
+    """One verdict row per distinct key, NULL included; FAIL exactly on
+    the keys carrying a non-WARNING violation."""
+    keys = {r.doc_id for r in docs.select("doc_id").collect()}
+    rows = res.passed.collect()
+    assert len(rows) == len(keys)
+    verdicts = {r.doc_id: r.verdict for r in rows}
+    assert set(verdicts) == keys
+    failing = {r.doc_id for r in res.violations.collect()
+               if r.severity != "WARNING"}
+    assert failing == {d for d, v in verdicts.items() if v == "FAIL"}
+
+
 def test_verdicts_partition_docs(result):
     docs, _, res = result
     verdicts = {r.doc_id: r.verdict for r in res.passed.collect()}
     assert len(verdicts) == CFG.n_docs  # every distinct doc gets a verdict
-    failing = {
-        r.doc_id
-        for r in res.violations.collect()
-        if r.doc_id is not None and r.severity != "WARNING"
-    }
-    assert failing == {d for d, v in verdicts.items() if v == "FAIL"}
+    _assert_verdicts_partition(docs, res)
+
+
+def test_verdicts_partition_hostile_doc_ids(hostile):
+    docs, _, res = hostile
+    _assert_verdicts_partition(docs, res)  # 40 keys -> 40 verdict rows
+    fails = {r.doc_id for r in res.passed.collect() if r.verdict == "FAIL"}
+    assert fails == {None, "\x00null_doc_id", "\x00"}
+
+
+def test_error_attribution_counts_null_key_once(hostile):
+    # NULL is its own key: it must neither merge with a real "\x00" doc
+    # (docs_with_errors, error_docs_E12) nor vanish
+    _, _, res = hostile
+    m = {r.name: r.value for r in res.metrics.collect()}
+    assert m["docs_with_errors"] == 3
+    assert m["error_docs_E12"] == 2      # NULL and "\x00"
+    assert m["error_docs_E13"] == 2      # "\x00" and "\x00null_doc_id"
+    assert m["error_docs_E10"] == 1      # NULL
 
 
 def test_clean_corpus_no_errors(spark):
