@@ -942,7 +942,7 @@ FROM c, LATERAL (
 def _q_textstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text analysis: token count, quality score, rolling fingerprint,
     language-ID — all portable formulas (functions/hashing.py), fused
-    into one single-tokenization expression (with_textstats)."""
+    into one single-tokenization Arrow pass (with_textstats)."""
     from fastpasta_spark.operators.textstats import with_textstats
 
     d = with_textstats(_read_spread(spark, sf_dir, "documents"))
@@ -1002,28 +1002,14 @@ FROM documents
 def _q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (k=8) as columns — exact oracle parity via the
     portable hash family."""
-    from fastpasta_spark.operators.dedup import (
-        _arrow_text_on,
-        minhash_signature,
-        with_shingles,
-    )
+    from fastpasta_spark.operators.arrowtext import minhash_signature_arrow
 
     d = _read_spread(spark, sf_dir, "documents").withColumn(
         "doc_id", F.col("doc_id").cast("long"))
-    if _arrow_text_on():
-        # Arrow kernel (round-8): the signature materializes in ONE
-        # mapInArrow node per row; the 8 element extractions below read
-        # that column, so no persist boundary is needed
-        from fastpasta_spark.operators.arrowtext import minhash_signature_arrow
-
-        sig = minhash_signature_arrow(d, k=8, n=3)
-    else:
-        # persist before element extraction: 8 references to the minhash
-        # column would otherwise each inline (and recompute) the whole
-        # tokenize+shingle+hash chain via ProjectionCollapse (~8x, measured)
-        from fastpasta_spark.functions.cache import tracked_persist
-        sig = tracked_persist(minhash_signature(with_shingles(d), k=8).select(
-            "doc_id", "minhash"))
+    # the signature materializes in ONE mapInArrow node per row; the 8
+    # element extractions below read that column, so no persist boundary
+    # is needed
+    sig = minhash_signature_arrow(d, k=8, n=3)
     cols = [F.expr(f"minhash[{j}]").alias(f"mh_{j}") for j in range(8)]
     return sig.select("doc_id", *cols)
 
@@ -1037,7 +1023,7 @@ def _sql_minhash_signatures() -> str:
         f"ELSE list_transform(range(0, len({tk}) - 2), "
         f"i -> array_to_string(({tk})[i+1:i+3], ' ')) END)"
     )
-    # same one-md5 + affine-mix family as minhash_signature (DuckDB is
+    # same one-md5 + affine-mix family as minhash_signature_arrow (DuckDB is
     # free to recompute the md5 per permutation — oracle cost is moot)
     mh = ", ".join(
         f"list_min(list_transform(sh, s -> "

@@ -1,23 +1,22 @@
-"""Arrow-batched twins of the tokenize/shingle/hash expression chains.
+"""Arrow-batched kernels for the tokenize/shingle/hash work of the text
+operators: dedup's minhash, simhash and shingle index, and
+textstats.with_textstats.
 
-Round-8 optimization (guide §4.1/§4.2): lambda-bearing SQL expressions
-(transform/filter/aggregate) never reach whole-stage codegen — every
-array element is an interpreted expression eval — and shingle pipelines
-additionally re-evaluate the token expression inside per-shingle
-lambdas. At sf1.0 (50k docs) that made minhash_signatures (4.4s),
-simhash (5.9s), and the shingle halves of jaccard_pairs/decontam the
-most expensive text queries for work that is fundamentally one
-tokenize+md5 pass.
+Lambda-bearing SQL expressions (transform/filter/aggregate) never reach
+whole-stage codegen — every array element is an interpreted expression
+eval — and shingle pipelines additionally re-evaluate the token
+expression inside per-shingle lambdas. These mapInArrow kernels do the
+work as what it fundamentally is: one tokenize+md5 pass per row.
 
-These mapInArrow kernels compute the IDENTICAL md5-derived integers:
-tokenization is `functions/hashing.py_tokens` (the fuzz-pinned python
-twin of `spark_tokens` — hostile-text parity across 3 seeds x 30k docs
-x 7 legs, scripts/fuzz_scoring.py), hashes are `py_md5_hash`'s 60-bit
-md5 prefix, and the minhash mix family is the same
+They compute the portable md5-derived integers: tokenization is
+`functions/hashing.py_tokens` (the fuzz-pinned python twin of
+`spark_tokens` — hostile-text parity across 3 seeds x 30k docs x 7
+legs, scripts/fuzz_scoring.py), hashes are `py_md5_hash`'s 60-bit md5
+prefix, and the minhash mix family is the same
 `(h % MIX_MOD) * a + b % MIX_MOD` affine arithmetic in exact int64.
-Every output is an INTEGER, so parity with the expression chains (and
-the DuckDB oracles) is bit-exact, not float-rounded — pinned per
-operator in tests/test_dedup.py.
+Every output is an INTEGER, so each kernel is an exact twin of the
+Python twins and DuckDB oracle — bit-exact, not float-rounded — pinned
+per operator in tests/test_dedup.py and tests/test_textstats.py.
 
 Heavy init (mix constants, numpy arrays) happens once per task before
 the batch loop (guide §4.5); a module-level shingle-hash cache
@@ -60,13 +59,11 @@ def _h60(s: str) -> int:
 
 
 def _shingles(text, n: int) -> list[str] | None:
-    """DISTINCT word n-gram shingles — exact twin of
-    dedup.with_shingles: fewer than n tokens yields the single
-    joined-tokens shingle ('' for EMPTY text), while NULL text
-    propagates to a NULL shingle array (split(translate(NULL)) is NULL,
-    so the whole expression chain yields NULL, not ['']) — returned as
-    None here; callers must emit NULL / no rows exactly like the
-    expression forms."""
+    """DISTINCT word n-gram shingles in first-occurrence order — exact
+    twin of the Python twins and DuckDB oracle: fewer than n tokens
+    yields the single joined-tokens shingle ('' for EMPTY text), while
+    NULL text yields None (no shingle set at all, not ['']); callers
+    emit a NULL signature / no index rows for it."""
     if text is None:
         return None
     toks = py_tokens(text)
@@ -80,16 +77,17 @@ def minhash_signature_arrow(df: DataFrame, k: int = 32, n: int = 3,
                             id_col: str = "doc_id",
                             text_col: str = "text",
                             out_col: str = "minhash") -> DataFrame:
-    """(id_col, minhash array<bigint>) — exact twin of
-    ``minhash_signature(with_shingles(df, text_col, n), k)`` projected
-    to the two columns every caller keeps.
+    """(id_col, minhash array<bigint>) — k-permutation MinHash over the
+    DISTINCT shingle set, exact twin of the Python twins and DuckDB
+    oracle: ONE md5 per shingle, then k affine mixes mod MIX_MOD
+    (functions/hashing.py mix family), min per permutation. NULL text
+    gives a NULL signature.
 
-    One vectorized pass instead of the interpreted aggregate-of-
-    transform chain; being a physical mapInArrow node it is also a
-    natural ProjectionCollapse boundary — downstream band/element
-    references read the materialized column instead of re-inlining the
-    shingle chain, so the tracked_persist the expression form needed is
-    unnecessary here.
+    Being a physical mapInArrow node it is a natural ProjectionCollapse
+    boundary — downstream band/element references read the
+    materialized column instead of re-inlining the shingle chain. Each
+    consumer of an unpersisted result still re-runs the stage, so
+    multi-consumer callers persist it (dedup.minhash_near_duplicates).
     """
     consts = mix_constants(k)
     a_vec = np.array([a for a, _ in consts], dtype=np.int64)
@@ -120,10 +118,10 @@ def minhash_signature_arrow(df: DataFrame, k: int = 32, n: int = 3,
 def simhash_arrow(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", bits: int = 32,
                   out_col: str = "simhash") -> DataFrame:
-    """(id_col, simhash bigint) — exact twin of ``dedup.simhash``
-    projected to the two columns its callers keep: per bit b, sign of
-    sum over DISTINCT tokens of (+1 if bit b of the 60-bit token hash
-    set else -1); token-free docs hash to 0."""
+    """(id_col, simhash bigint) — exact twin of the Python twins and
+    DuckDB oracle: per bit b, sign of sum over DISTINCT tokens of (+1
+    if bit b of the 60-bit token hash set else -1); token-free docs
+    (NULL text included) hash to 0."""
     id_type = dict(df.dtypes)[id_col]
     schema = f"{id_col} {id_type}, {out_col} bigint"
     weights = (1 << np.arange(bits)).astype(np.int64)
@@ -173,24 +171,21 @@ def _round_half_up(x: float, dp: int = 6) -> float:
 
 
 def textstats_arrow(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact twin of textstats.with_textstats — all input columns plus
-    (n_tokens, quality, fingerprint, lang_pred) computed in one Python
-    pass per batch instead of the interpreted let-bound expression.
+    """The kernel behind textstats.with_textstats — all input columns
+    plus (n_tokens, quality, fingerprint, lang_pred) computed in one
+    Python pass per batch; exact twin of the Python twins and DuckDB
+    oracle, and of textstats' individual JVM operators on non-NULL text.
 
-    Semantics replicated precisely (parity-pinned in
-    tests/test_textstats.py): n_chars counts CODE POINTS (Spark
-    length() is UTF8String.numChars, same as Python len — NOT Java
-    String.length's UTF-16 units); the alpha ratio counts [a-z] after
-    lowercasing; quality terms sum left-to-right and round HALF_UP on
-    the shortest-repr decimal (Spark round); ratio/best equality for
-    lang_pred compares the identical IEEE doubles; fingerprint is the
-    exact 48-bit-md5 rolling hash mod 2^31-1. NULL text follows the
-    expression chain precisely: the token array is NULL, so
-    size/aggregate go NULL — but the let-binding aggregate's ZERO
-    struct declares n_tokens/fingerprint as NON-NULLABLE fields, so
-    those NULLs coerce to 0 (probed empirically); quality is 0.25
-    because least() SKIPS the NULL stopword term while the alpha term
-    stays 0; lang_pred is 'unk'.
+    Semantics replicated precisely (pinned in tests/test_textstats.py):
+    n_chars counts CODE POINTS (Spark length() is UTF8String.numChars,
+    same as Python len — NOT Java String.length's UTF-16 units); the
+    alpha ratio counts [a-z] after lowercasing; quality terms sum
+    left-to-right and round HALF_UP on the shortest-repr decimal (Spark
+    round); ratio/best equality for lang_pred compares the identical
+    IEEE doubles; fingerprint is the exact 48-bit-md5 rolling hash mod
+    2^31-1. NULL text gives n_tokens 0, fingerprint 0, quality 0.25
+    (the stopword term counts as satisfied while the alpha term stays
+    0) and lang_pred 'unk'.
     """
     from fastpasta_spark.operators.textstats import STOPWORDS
 
@@ -336,13 +331,12 @@ def shingle_index_arrow(df: DataFrame, id_col: str, text_col: str,
                         with_count: bool = True,
                         drop_empty: bool = False,
                         out_col: str = "shingle") -> DataFrame:
-    """Exploded hashed-shingle inverted index — exact twin of the
-    with_shingles -> transform(md5) -> explode chains in
-    ``jaccard_pairs`` (with_count=True: carries n_sh = DISTINCT shingle
-    count) and ``decontaminate`` (drop_empty=True: the '' shingle of
-    token-free docs is dropped BEFORE hashing, same as its
-    filter(s -> s <> '')). Output: (id_col[, n_sh][, within_col],
-    out_col bigint)."""
+    """Exploded hashed-shingle inverted index — exact twin of the Python
+    twins and DuckDB oracle — for ``dedup.jaccard_pairs``
+    (with_count=True: carries n_sh = DISTINCT shingle count) and
+    ``dedup.decontaminate`` (drop_empty=True: the '' shingle of
+    token-free docs is dropped BEFORE hashing). NULL text emits no rows.
+    Output: (id_col[, n_sh][, within_col], out_col bigint)."""
     dtypes = dict(df.dtypes)
     parts = [f"{id_col} {dtypes[id_col]}"]
     if with_count:

@@ -2,9 +2,11 @@
 
 Beyond the reference's key-dedup (distinct FEE ids,
 `/root/reference/fastpasta/src/stats/rdh_stats.rs:93-98`), a 100 TB
-corpus needs CONTENT dedup. All hot paths are built-in Column
-expressions (whole-stage codegen); hashes are the portable md5-derived
-family (functions/hashing.py) so DuckDB oracles reproduce them exactly.
+corpus needs CONTENT dedup. The shingle/minhash/simhash chains run as the
+Arrow kernels of operators/arrowtext.py; every other hot path is
+built-in Column expressions (whole-stage codegen). Hashes are the
+portable md5-derived family (functions/hashing.py) so DuckDB oracles
+reproduce them exactly.
 
 Scale notes per operator are in each docstring — the common theme:
 never shuffle document text; shuffle (hash, id) pairs only.
@@ -12,27 +14,16 @@ never shuffle document text; shuffle (hash, id) pairs only.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from fastpasta_spark.functions.cache import tracked_persist
-from fastpasta_spark.functions.hashing import (
-    MIX_MOD,
-    mix_constants,
-    spark_md5_hash,
-    spark_tokens,
+from fastpasta_spark.functions.hashing import spark_md5_hash, spark_tokens
+from fastpasta_spark.operators.arrowtext import (
+    minhash_signature_arrow,
+    shingle_index_arrow,
+    simhash_arrow,
 )
-
-
-def _arrow_text_on() -> bool:
-    """Round-8: route tokenize/shingle/hash chains to the Arrow numpy
-    kernels (operators/arrowtext.py) — identical md5-derived integers,
-    one vectorized pass instead of per-element interpreted lambdas.
-    FASTPASTA_ARROW_TEXT=0 falls back to the expression chains (A/B
-    lever + escape hatch); parity is pinned in tests/test_dedup.py."""
-    return os.environ.get("FASTPASTA_ARROW_TEXT", "1") != "0"
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -81,51 +72,6 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 # shingles + MinHash + LSH
 # ---------------------------------------------------------------------------
-
-
-def with_shingles(df: DataFrame, text_col: str = "text", n: int = 3,
-                  out_col: str = "shingles") -> DataFrame:
-    """DISTINCT word n-gram shingles as an array column (JVM-side)."""
-    toks = spark_tokens(text_col)
-    expr = (
-        f"array_distinct(CASE WHEN size({toks}) < {n} "
-        f"THEN array(concat_ws(' ', {toks})) "
-        f"ELSE transform(sequence(0, size({toks}) - {n}), "
-        f"i -> concat_ws(' ', slice({toks}, i + 1, {n}))) END)"
-    )
-    return df.withColumn(out_col, F.expr(expr))
-
-
-def minhash_signature(df: DataFrame, k: int = 32, shingle_col: str = "shingles",
-                      out_col: str = "minhash") -> DataFrame:
-    """k-permutation MinHash signature over the shingle set.
-
-    ONE md5 per shingle, then k affine mixes mod a 30-bit prime
-    (functions/hashing.py mix family) — round 1 paid k md5+conv
-    evaluations per shingle, which dominated the query's cost. The inner
-    1-element `aggregate(array(md5hash(s)), ...)` is a let-binding: SQL
-    lambdas can't name intermediates, and inlining the md5 expression
-    into the per-permutation loop would re-evaluate it k times. ONE
-    nested expression tree, so ProjectionCollapse can't re-inline the
-    (expensive) shingle chain either. No UDF, no shuffle.
-    """
-    consts = mix_constants(k)
-    a_arr = "array(" + ", ".join(f"{a}L" for a, _ in consts) + ")"
-    b_arr = "array(" + ", ".join(f"{b}L" for _, b in consts) + ")"
-    M = MIX_MOD
-    h = spark_md5_hash("s")
-    expr = (
-        f"IF(size({shingle_col}) = 0, "
-        f"array_repeat(cast(null as bigint), {k}), "
-        f"aggregate({shingle_col}, "
-        f"array_repeat(cast({M} as bigint), {k}), "
-        f"(acc, s) -> aggregate(array({h}), acc, "
-        f"(a2, h) -> transform(sequence(0, {k - 1}), j -> "
-        f"least(element_at(a2, j + 1), "
-        f"pmod((h % {M}) * element_at({a_arr}, j + 1) "
-        f"+ element_at({b_arr}, j + 1), {M}))))))"
-    )
-    return df.withColumn(out_col, F.expr(expr))
 
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id", bands: int = 8,
@@ -184,25 +130,16 @@ def minhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
                             bands: int = 8, threshold: float = 0.5) -> DataFrame:
     """shingle -> minhash -> LSH bands -> candidate pairs >= threshold.
 
-    The signature table is persisted: it is tiny (k longs per doc) but
-    referenced ~10x downstream (8 band exprs + both self-join sides);
-    without the materialization boundary ProjectionCollapse inlines the
-    full tokenize+shingle+k-hash chain into every reference (measured
-    >10x slowdown) — and with the Arrow kernel the mapInArrow stage
-    would re-run per consumer. At cluster scale you would write
-    signatures to a bucketed table instead — same boundary, durable.
+    Signatures come from the Arrow kernel
+    (arrowtext.minhash_signature_arrow). The signature table is
+    persisted: it is tiny (k longs per doc) but referenced ~10x
+    downstream (8 band exprs + both self-join sides), and without the
+    materialization boundary the mapInArrow stage would re-run per
+    consumer. At cluster scale you would write signatures to a bucketed
+    table instead — same boundary, durable.
     """
-    if _arrow_text_on():
-        from fastpasta_spark.operators.arrowtext import (
-            minhash_signature_arrow,
-        )
-
-        sig = minhash_signature_arrow(df, k=k, n=n, id_col=id_col,
-                                      text_col=text_col)
-    else:
-        sig = minhash_signature(
-            with_shingles(df, text_col, n), k=k).select(id_col, "minhash")
-    sig = tracked_persist(sig)
+    sig = tracked_persist(minhash_signature_arrow(
+        df, k=k, n=n, id_col=id_col, text_col=text_col))
     pairs = lsh_candidate_pairs(sig, id_col, bands=bands, rows_per_band=k // bands)
     return pairs.filter(F.col("est_jaccard") >= threshold)
 
@@ -229,8 +166,7 @@ _warned_default_max_df = False
 def jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                   n: int = 3, threshold: float = 0.5,
                   within_col: str | None = None,
-                  max_df: int | None = _MAX_DF_UNSET,
-                  hash_shingles: bool = True) -> DataFrame:
+                  max_df: int | None = _MAX_DF_UNSET) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs sharing >=1 shingle.
 
     Scale: inverted-index join — explode distinct shingles, self-join on
@@ -239,8 +175,8 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     At web scale you run this ONLY on LSH candidates; standalone it's
     quadratic in the worst case (all docs sharing a shingle).
 
-    hash_shingles (default on) replaces each shingle string with its
-    60-bit md5-derived hash BEFORE the explode: the index shuffles
+    The index (arrowtext.shingle_index_arrow) carries each shingle as
+    its 60-bit md5-derived hash, not its string: the index shuffles
     fixed-width bigints instead of multi-word strings and the self-join
     compares longs — measured 3x faster end-to-end at sf0.1 with
     identical output (jaccard over hashed shingles equals jaccard over
@@ -273,23 +209,8 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                 "Pass max_df=None for exact (quadratic-risk) jaccard, or "
                 "max_df explicitly to silence this.", stacklevel=2)
         max_df = DEFAULT_MAX_DF
-    if hash_shingles and _arrow_text_on():
-        from fastpasta_spark.operators.arrowtext import shingle_index_arrow
-
-        inv = shingle_index_arrow(df, id_col, text_col, n,
-                                  within_col=within_col, with_count=True)
-    else:
-        sh = with_shingles(df, text_col, n).select(
-            F.col(id_col), F.col("shingles"),
-            *( [F.col(within_col)] if within_col else [] ),
-        ).withColumn("n_sh", F.expr("size(shingles)"))
-        keys = (F.expr(f"transform(shingles, s -> {spark_md5_hash('s')})")
-                if hash_shingles else F.col("shingles"))
-        inv = sh.select(
-            F.col(id_col), F.col("n_sh"),
-            *( [F.col(within_col)] if within_col else [] ),
-            F.explode(keys).alias("shingle"),
-        )
+    inv = shingle_index_arrow(df, id_col, text_col, n,
+                              within_col=within_col, with_count=True)
     # materialization boundary: the index feeds the df-cap groupBy AND
     # both self-join sides — without it each consumer recomputes the
     # tokenize+shingle+explode chain. At cluster scale, write it to a
@@ -409,56 +330,18 @@ def segment_dedup(df: DataFrame, id_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 
 
-def simhash(df: DataFrame, text_col: str = "text", bits: int = 32,
-            out_col: str = "simhash") -> DataFrame:
-    """SimHash fingerprint: for each bit b, sign of sum over distinct
-    tokens of (+1 if bit b of token-hash set else -1).
-
-    Pure Column expressions: one token-hash array, then ONE pass over
-    it accumulating all per-bit counters — no explode, no shuffle
-    (fingerprinting is embarrassingly parallel). Near-dup detection
-    groups by hamming bands of the fingerprint.
-
-    Expression shape (the let-binding pattern shared with
-    minhash_signature / with_textstats): SQL lambdas can't name
-    intermediates, and lambda-bearing subtrees are NOT subexpression-
-    eliminated — inlining the md5 token-hash chain into `bits`
-    independent aggregates re-evaluated it `bits` times (round-2's one
-    perf-weak query). Two nested 1-element `aggregate(array(<expr>),
-    ...)` wrappers bind (1) the hash array and (2) the per-bit counter
-    array, each evaluated once per row.
-    """
-    toks = f"array_distinct({spark_tokens(text_col)})"
-    hashes = f"transform({toks}, t -> {spark_md5_hash('t')})"
-    # counters over the BOUND hash array `hs`: one fold, bits counters
-    counts = (
-        f"aggregate(hs, array_repeat(0L, {bits}), "
-        f"(acc, h) -> zip_with(acc, sequence(0, {bits - 1}), "
-        f"(c, b) -> c + IF(shiftright(h, b) % 2 = 1, 1L, -1L)))"
-    )
-    finish = " + ".join(
-        f"IF(element_at(cnts, {b + 1}) > 0, {1 << b}L, 0L)" for b in range(bits)
-    )
-    expr = (
-        f"aggregate(array({hashes}), cast(0 as bigint), "
-        f"(z, hs) -> aggregate(array({counts}), z, (z2, cnts) -> {finish}))"
-    )
-    return df.withColumn(out_col, F.expr(expr))
-
-
 def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id",
                          text_col: str = "text",
                          bits: int = 32) -> DataFrame:
-    """(id_col, simhash) — the projection every simhash consumer keeps,
-    via the Arrow numpy kernel by default (one vectorized pass; the
-    32-bit expression form is ~6s of interpreted lambda evals at 50k
-    docs) with the expression chain as the FASTPASTA_ARROW_TEXT=0
-    fallback. Exact-integer parity pinned in tests/test_dedup.py."""
-    if _arrow_text_on():
-        from fastpasta_spark.operators.arrowtext import simhash_arrow
-
-        return simhash_arrow(df, id_col, text_col, bits)
-    return simhash(df, text_col, bits).select(id_col, "simhash")
+    """(id_col, simhash) SimHash fingerprints: for each bit b, the sign
+    of the sum over DISTINCT tokens of (+1 if bit b of the 60-bit token
+    hash is set else -1); token-free and NULL texts hash to 0. One
+    vectorized Arrow pass (arrowtext.simhash_arrow), no shuffle;
+    exact-integer parity with the Python twin is pinned in
+    tests/test_dedup.py and with the DuckDB oracle by the `simhash`
+    query of __spark_entry__.py. Near-dup detection groups by hamming
+    bands of the fingerprint (simhash_duplicates)."""
+    return simhash_arrow(df, id_col, text_col, bits)
 
 
 def simhash_duplicates(df: DataFrame, id_col: str = "doc_id",
@@ -486,8 +369,7 @@ def simhash_duplicates(df: DataFrame, id_col: str = "doc_id",
         raise ValueError(
             f"bands={bands} must divide evenly into bits={bits}")
     # persist: the fingerprint is referenced by `bands` band exprs +
-    # both join sides — same ProjectionCollapse inlining hazard as
-    # minhash (and the Arrow kernel would re-run per consumer)
+    # both join sides, and the Arrow kernel would re-run per consumer
     h = tracked_persist(simhash_fingerprints(df, id_col, text_col, bits))
     chunk = bits // bands
     band_cols = [
@@ -534,7 +416,6 @@ def decontaminate(
     text_col: str = "text",
     n: int = 5,
     min_overlap: int = 1,
-    hash_shingles: bool = True,
     broadcast_index: bool = True,
 ) -> DataFrame:
     """Test-set decontamination: flag corpus documents sharing at least
@@ -556,28 +437,17 @@ def decontaminate(
     identical output, no executor-memory bound on the benchmark side.
 
     Returns (id_col, bench_id_col, overlap) where overlap counts the
-    DISTINCT shared shingles (with_shingles de-dups per document, so a
-    plain count over the join is already distinct).
+    DISTINCT shared shingles (the shingle index de-dups per document,
+    so a plain count over the join is already distinct).
     """
     def inv(df: DataFrame, out_id: str, src_id: str) -> DataFrame:
-        slim = df.select(F.col(src_id).alias(out_id), text_col)
-        if hash_shingles and _arrow_text_on():
-            from fastpasta_spark.operators.arrowtext import (
-                shingle_index_arrow,
-            )
-
-            return shingle_index_arrow(slim, out_id, text_col, n,
-                                       with_count=False, drop_empty=True)
-        sh = with_shingles(slim, text_col, n)
-        # zero-token docs shingle to [''] (with_shingles' short-doc
-        # branch); dropping the empty shingle keeps every empty corpus
-        # doc from "contaminating" against every empty benchmark doc —
-        # and from an M*N pair blow-up on that one hot key
-        nonempty = F.expr("filter(shingles, s -> s <> '')")
-        keys = (F.expr(f"transform(filter(shingles, s -> s <> ''), "
-                       f"s -> {spark_md5_hash('s')})")
-                if hash_shingles else nonempty)
-        return sh.select(F.col(out_id), F.explode(keys).alias("shingle"))
+        # drop_empty: zero-token docs shingle to ['']; dropping it keeps
+        # every empty corpus doc from "contaminating" against every
+        # empty benchmark doc — and from an M*N pair blow-up on that one
+        # hot key
+        return shingle_index_arrow(
+            df.select(F.col(src_id).alias(out_id), text_col), out_id,
+            text_col, n, with_count=False, drop_empty=True)
 
     c_inv = inv(corpus, id_col, id_col)
     b_inv = inv(benchmark, bench_id_col, bench_id_col)
@@ -684,7 +554,8 @@ def dup_spans(df: DataFrame, id_col: str = "doc_id",
     groupBy(key); flagging is one shuffle join back on the key (no
     pair join anywhere, so no quadratic blowup and no df cap needed);
     the island window partitions by doc — bounded by doc length. The
-    token array is let-bound once per row (see with_textstats).
+    token array is let-bound once per row (see bm25_scores in
+    operators/textstats.py).
 
     Returns (id_col, span_start, span_end, n_shingles): token-index
     span [start, end] inclusive, plus how many duplicated windows

@@ -86,7 +86,8 @@ COSINE_EXPR = (
 
 def _pair_cosine_udf():
     """Arrow-batched numpy twin of COSINE_EXPR over a (vec, vec) column
-    pair — the round-8 hot-path form for pair scoring.
+    pair — the one pair-scoring path (COSINE_EXPR itself serves the
+    literal codebook paths and the parity test).
 
     Lambda-bearing SQL expressions are NOT whole-stage-codegen'd: every
     element of every zip_with/aggregate is an interpreted expression
@@ -137,14 +138,9 @@ def _pair_cosine_udf():
 
 
 def cosine_sim_col(a: str, b: str):
-    """Cosine similarity Column between two array columns, COSINE_EXPR
-    NULL semantics. Defaults to the Arrow numpy path (see
-    _pair_cosine_udf); FASTPASTA_ARROW_COSINE=0 falls back to the
-    literal HOF expression (A/B lever + escape hatch)."""
-    import os
-
-    if os.environ.get("FASTPASTA_ARROW_COSINE", "1") == "0":
-        return F.expr(COSINE_EXPR.format(a=a, b=b))
+    """Cosine similarity Column between two array columns, computed by
+    the Arrow numpy kernel (_pair_cosine_udf) with COSINE_EXPR's NULL
+    semantics."""
     return _pair_cosine_udf()(F.col(a), F.col(b))
 
 

@@ -1,8 +1,9 @@
 """Text analysis for training-data curation: language-ID, quality
 scoring, token counting, document fingerprinting.
 
-All pure Column expressions (codegen, no UDFs) with DuckDB-oracle
-twins in __spark_entry__.py. The per-column profiling mirrors the
+Pure Column expressions (codegen, no UDFs) except the fused
+with_textstats pass, which is an Arrow kernel (operators/arrowtext.py);
+DuckDB-oracle twins live in __spark_entry__.py. The per-column profiling mirrors the
 reference's stats side (null rates / min-max / histograms,
 `/root/reference/fastpasta/src/stats/`): these operators extend it to
 content-aware profiling a data pipeline needs.
@@ -14,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fastpasta_spark.functions.hashing import spark_tokens
+from fastpasta_spark.operators.arrowtext import textstats_arrow
 
 # tiny per-language stopword lists for the n-gram/stopword heuristic —
 # deliberately small so the oracle SQL stays readable
@@ -102,68 +104,14 @@ def fingerprint(df: DataFrame, text_col: str = "text",
 
 def with_textstats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """All four stats (n_tokens, quality, fingerprint, lang_pred) in ONE
-    expression — same math as the individual operators above (for
-    non-null text), but the token array and the four stopword ratios are
-    each computed exactly once.
-
-    Round-8 default: the Arrow kernel twin (arrowtext.textstats_arrow)
-    computes the identical columns in one vectorized Python pass —
-    even let-bound, the expression form is interpreted per token
-    (lambda-bearing subtrees never reach codegen). The expression
-    below remains the FASTPASTA_ARROW_TEXT=0 fallback; parity is
-    pinned on hostile text in tests/test_textstats.py.
-
-    Why the let-binding (fallback path): the chained-withColumn form
-    collapses into a single Project where every reference re-inlines
-    the tokenize expression, and lambda-bearing subtrees
-    (filter/aggregate) are NOT subexpression-eliminated by codegen —
-    the round-1 bench paid ~10 tokenizations per row. SQL lambdas have
-    no let-binding, so a 1-element `aggregate` plays that role twice:
-    once to bind `toks`, once to bind the ratio vector `rs`.
+    pass: the Arrow kernel arrowtext.textstats_arrow tokenizes each row
+    once and computes the same math as the individual operators above
+    (pinned against them in tests/test_textstats.py, and against the
+    DuckDB oracle by the `textstats` query of __spark_entry__.py). NULL
+    text gives (0, 0.25, 0, 'unk'); the individual operators give
+    (NULL, 0.0, NULL, 'unk').
     """
-    import os as _os
-
-    if _os.environ.get("FASTPASTA_ARROW_TEXT", "1") != "0":
-        from fastpasta_spark.operators.arrowtext import textstats_arrow
-
-        return textstats_arrow(df, text_col)
-    langs = list(STOPWORDS)
-
-    def ratio(lg: str) -> str:
-        words = ", ".join(f"'{w}'" for w in STOPWORDS[lg])
-        return (f"CAST(size(filter(toks, t -> t IN ({words}))) AS DOUBLE) / "
-                "greatest(size(toks), 1)")
-
-    rs_arr = "array(" + ", ".join(ratio(lg) for lg in langs) + ")"
-    rs = {lg: f"element_at(rs, {i + 1})" for i, lg in enumerate(langs)}
-    best = "greatest(" + ", ".join(rs.values()) + ")"
-    pick = "CASE " + "".join(
-        f"WHEN {rs[lg]} = {best} AND {best} > 0 THEN '{lg}' " for lg in langs
-    ) + "ELSE 'unk' END"
-
-    tc = f"coalesce({text_col}, '')"
-    n_chars = f"length({tc})"
-    mean_wl = f"CAST({n_chars} AS DOUBLE) / greatest(size(toks), 1)"
-    alpha = (f"CAST(length(regexp_replace(lower({tc}), '[^a-z]', '')) AS DOUBLE)"
-             f" / greatest({n_chars}, 1)")
-    quality = (
-        f"round((IF({n_chars} BETWEEN 50 AND 5000, 0.25, 0.0) + "
-        f"IF({mean_wl} BETWEEN 3.0 AND 12.0, 0.25, 0.0) + "
-        f"0.25 * least({alpha} * 1.25, 1.0) + "
-        f"0.25 * least({rs['en']} * 5.0, 1.0)), 6)"
-    )
-    fp = ("aggregate(toks, 7L, (acc2, t) -> pmod(acc2 * 1000003 + "
-          "cast(conv(substr(md5(t), 1, 12), 16, 10) as bigint), 2147483647))")
-    struct = (f"named_struct('n_tokens', size(toks), 'quality', {quality}, "
-              f"'fingerprint', {fp}, 'lang_pred', {pick})")
-    zero = ("named_struct('n_tokens', 0, 'quality', CAST(0 AS DOUBLE), "
-            "'fingerprint', 0L, 'lang_pred', '')")
-    expr = (f"aggregate(array({spark_tokens(text_col)}), {zero}, "
-            f"(acc, toks) -> aggregate(array({rs_arr}), acc, "
-            f"(a2, rs) -> {struct}))")
-    out = df.withColumn("_ts", F.expr(expr))
-    return out.select("*", "_ts.n_tokens", "_ts.quality", "_ts.fingerprint",
-                      "_ts.lang_pred").drop("_ts")
+    return textstats_arrow(df, text_col)
 
 
 def repetition_ratio(df: DataFrame, text_col: str = "text", n: int = 2,
@@ -465,9 +413,11 @@ def bm25_scores(df: DataFrame, query_terms: list[str],
     join, zero exchanges (plan-pinned); the inverted index a search
     engine would build is pointless when the query set is known up
     front. Both passes bind the token array ONCE per row via the
-    1-element-aggregate let-binding (see with_textstats: codegen does
-    NOT subexpression-eliminate lambda-bearing subtrees, so naive
-    per-term expressions re-tokenize |terms|+1 times).
+    1-element-aggregate let-binding ``aggregate(array(<tokens>), zero,
+    (acc, toks) -> <body using toks>)``: SQL lambdas cannot name an
+    intermediate, and codegen does NOT subexpression-eliminate
+    lambda-bearing subtrees, so naive per-term expressions re-tokenize
+    |terms|+1 times.
 
     Default output: (id_col, n_tokens, bm25 rounded to ``dp``),
     matching docs only — the always-positive idf makes score > 0
@@ -653,7 +603,7 @@ def _fit_dsir_row_expr(ref: DataFrame, target_filter, text_col: str,
     # index can never be out of bounds (ANSI-safe).
     tok_lr = f"element_at({arr}, cast({bucket('t')} as int) + 1)"
     # bind the token array once per row (1-element-aggregate let-binding,
-    # see with_textstats) instead of tokenizing for n and again for the sum
+    # see bm25_scores) instead of tokenizing for n and again for the sum
     zero = "named_struct('n', 0L, 's', CAST(0.0 AS DOUBLE))"
     return (f"aggregate(array({toks}), {zero}, (acc, toks) -> "
             f"named_struct('n', cast(coalesce(size(toks), 0) as long), "
@@ -696,7 +646,7 @@ def gopher_rules(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Scale shape: one pure-Column expression per row — words and lines
     are each bound ONCE via the 1-element-aggregate let-binding (see
-    with_textstats: codegen does not subexpression-eliminate
+    bm25_scores: codegen does not subexpression-eliminate
     lambda-bearing subtrees), no UDF, no shuffle, applies to batch or
     streaming frames alike. NULL text fails word_count/alpha_words/
     stop_words (it has no words), like the empty document it is.

@@ -12,8 +12,8 @@ training-pipeline extension the prompt mandates, composed entirely from
 the tested operators (textstats, dedup, graph).
 
 Scale notes:
-  * one textstats pass computes quality/lang/tokens in a single codegen
-    expression (operators/textstats.with_textstats); the gated survivor
+  * one textstats pass computes quality/lang/tokens in a single Arrow
+    pass (operators/textstats.with_textstats); the gated survivor
     set is persisted once and feeds pair generation, the keeper
     anti-join and the output
   * dedup edges never carry text — (hash, id) pairs only

@@ -78,10 +78,13 @@ def golden_diff(metrics: DataFrame, golden: DataFrame) -> DataFrame:
 
     Full-outer join on metric name; a field missing on either side is a
     mismatch, like the reference's per-field validate_fields! errors.
+    No broadcast hint: Spark has no broadcast build side for a full
+    outer equi-join, so it ignores the hint (the plan is a sort-merge
+    join either way) and logs a HintErrorLogger warning per call.
     """
     cur = metrics.select(F.col("name"), F.col("value").alias("cur"))
     gold = golden.select(F.col("name"), F.col("value").alias("gold"))
-    j = cur.join(F.broadcast(gold), "name", "full_outer")
+    j = cur.join(gold, "name", "full_outer")
 
     tol = F.lit(0.0)
     for metric, rtol in APPROX_METRICS.items():

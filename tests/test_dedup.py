@@ -27,6 +27,24 @@ def _py_shingles(text, n=3):
     return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
 
 
+def _py_minhash(text, k=8, n=3):
+    """Python twin of the minhash kernel; NULL text -> NULL signature."""
+    from fastpasta_spark.functions.hashing import mix_constants, py_mix
+
+    if text is None:
+        return None
+    hs = [py_md5_hash(s) for s in _py_shingles(text, n)]
+    return [min(py_mix(h, a, b) for h in hs) for a, b in mix_constants(k)]
+
+
+def _py_simhash(text, bits=32):
+    """Python twin of the simhash kernel: per bit b, the sign of the sum
+    over DISTINCT tokens of +1/-1 by bit b of the 60-bit token hash."""
+    hs = [py_md5_hash(t) for t in set(py_tokens(text))]
+    return sum(1 << b for b in range(bits)
+               if sum(1 if h >> b & 1 else -1 for h in hs) > 0)
+
+
 def test_exact_duplicates(spark, documents):
     # inject known duplicates
     dup = documents.limit(3).withColumn(
@@ -39,18 +57,13 @@ def test_exact_duplicates(spark, documents):
 
 
 def test_minhash_matches_python(spark, documents):
-    from fastpasta_spark.functions.hashing import mix_constants, py_mix
+    from fastpasta_spark.operators.arrowtext import minhash_signature_arrow
 
-    rows = documents.limit(20).collect()
-    sig_df = dedup.minhash_signature(
-        dedup.with_shingles(documents.limit(20)), k=8
-    ).select("doc_id", "minhash").collect()
-    got = {r.doc_id: r.minhash for r in sig_df}
-    consts = mix_constants(8)
-    for r in rows:
-        hs = [py_md5_hash(s) for s in _py_shingles(r.text)]
-        expected = [min(py_mix(h, a, b) for h in hs) for a, b in consts]
-        assert got[r.doc_id] == expected, r.doc_id
+    d = documents.limit(20)
+    got = {r.doc_id: r.minhash
+           for r in minhash_signature_arrow(d, k=8, n=3).collect()}
+    for r in d.collect():
+        assert got[r.doc_id] == _py_minhash(r.text), r.doc_id
 
 
 def test_exact_duplicates_hot_hash_capped(spark):
@@ -134,8 +147,8 @@ def test_simhash_deterministic_and_near(spark, documents):
     hits = sum((r.doc_id, f"{r.doc_id}_c") in found for r in df.collect())
     assert hits >= 8  # simhash is approximate; near-identical docs collide
     # determinism
-    h1 = dedup.simhash(df).select("doc_id", "simhash").collect()
-    h2 = dedup.simhash(df.repartition(5)).select("doc_id", "simhash").collect()
+    h1 = dedup.simhash_fingerprints(df).collect()
+    h2 = dedup.simhash_fingerprints(df.repartition(5)).collect()
     assert sorted(map(tuple, h1)) == sorted(map(tuple, h2))
 
 
@@ -253,7 +266,7 @@ def test_simhash_duplicates_match_bruteforce(spark):
         [(f"d{i}", t) for i, t in enumerate(texts)],
         "doc_id string, text string")
     fps = {r.doc_id: r.simhash
-           for r in dedup.simhash(df, bits=32).collect()}
+           for r in dedup.simhash_fingerprints(df, bits=32).collect()}
     expected = set()
     for a in fps:
         for b in fps:
@@ -644,8 +657,8 @@ def test_remove_contaminated_spans_property_and_shuffle_parity(spark):
 
 
 # ---------------------------------------------------------------------------
-# round-8: Arrow text kernels (operators/arrowtext.py) vs the expression
-# chains they replace — exact-integer parity on hostile text
+# Arrow text kernels (operators/arrowtext.py) vs the Python twins —
+# exact-integer parity on hostile text
 # ---------------------------------------------------------------------------
 
 HOSTILE_ROWS = [
@@ -661,6 +674,7 @@ HOSTILE_ROWS = [
     (9, "x " * 50, "s1"),                # long run, duplicate shingles
     (10, "İstanbul Iı dotted undotted", "s0"),  # fold edge
     (11, "a-b_c.d,e;f:g h", "s1"),       # separators only between chars
+    (12, "!!! ... 中文 —", "s0"),         # non-empty but token-free
 ]
 
 
@@ -670,92 +684,92 @@ def hostile(spark):
         HOSTILE_ROWS, "doc_id long, text string, source string").cache()
 
 
-def _with_env(monkeypatch, on: bool):
-    monkeypatch.setenv("FASTPASTA_ARROW_TEXT", "1" if on else "0")
+def _py_index(n, drop_empty):
+    """Python twin of the hashed shingle index: {doc_id: shingle set};
+    NULL text has no entry (no index rows)."""
+    return {i: {s for s in _py_shingles(t, n) if s or not drop_empty}
+            for i, t, _src in HOSTILE_ROWS if t is not None}
 
 
-def test_minhash_arrow_matches_expression(spark, hostile, monkeypatch):
+def test_minhash_arrow_matches_python(spark, hostile):
     from fastpasta_spark.operators.arrowtext import minhash_signature_arrow
 
-    def norm(r):
-        return (r.doc_id,
-                list(r.minhash) if r.minhash is not None else None)
-
-    arrow = sorted(
-        norm(r)
-        for r in minhash_signature_arrow(hostile, k=8, n=3).collect())
-    expr = sorted(
-        norm(r)
-        for r in dedup.minhash_signature(
-            dedup.with_shingles(hostile, "text", 3), k=8)
-        .select("doc_id", "minhash").collect())
-    assert arrow == expr
-    # NULL text -> NULL signature on BOTH paths (split(NULL) is NULL)
-    d = dict(arrow)
-    assert d[2] is None and d[1] is not None
+    got = {r.doc_id: r.minhash
+           for r in minhash_signature_arrow(hostile, k=8, n=3).collect()}
+    assert got == {i: _py_minhash(t) for i, t, _src in HOSTILE_ROWS}
+    # NULL text -> NULL signature; empty text -> the '' shingle's
+    assert got[2] is None and got[1] is not None
 
 
-def test_simhash_arrow_matches_expression(spark, hostile, monkeypatch):
-    _with_env(monkeypatch, True)
-    arrow = sorted((r.doc_id, r.simhash) for r in
-                   dedup.simhash_fingerprints(hostile, bits=32).collect())
-    _with_env(monkeypatch, False)
-    expr = sorted((r.doc_id, r.simhash) for r in
-                  dedup.simhash_fingerprints(hostile, bits=32).collect())
-    assert arrow == expr
-    # token-free docs hash to 0 on both paths
-    d = dict(arrow)
-    assert d[1] == 0 and d[2] == 0
+def test_simhash_arrow_matches_python(spark, hostile):
+    got = {r.doc_id: r.simhash for r in
+           dedup.simhash_fingerprints(hostile, bits=32).collect()}
+    assert got == {i: _py_simhash(t) for i, t, _src in HOSTILE_ROWS}
+    # token-free docs (empty, NULL, punctuation/non-ASCII only) hash to 0
+    assert got[1] == got[2] == got[12] == 0
 
 
-def test_shingle_index_arrow_matches_expression(spark, hostile, monkeypatch):
+def test_shingle_index_arrow_matches_python(spark, hostile):
     from fastpasta_spark.operators.arrowtext import shingle_index_arrow
 
     # jaccard form: n_sh + within passthrough, '' kept
-    arrow = sorted(map(tuple, shingle_index_arrow(
+    got = sorted(map(tuple, shingle_index_arrow(
         hostile, "doc_id", "text", 3, within_col="source",
         with_count=True).collect()))
-    sh = dedup.with_shingles(hostile, "text", 3).withColumn(
-        "n_sh", F.expr("size(shingles)"))
-    from fastpasta_spark.functions.hashing import spark_md5_hash
-    expr = sorted(map(tuple, sh.select(
-        "doc_id", "n_sh", "source",
-        F.explode(F.expr(
-            f"transform(shingles, s -> {spark_md5_hash('s')})"))
-        .alias("shingle")).collect()))
-    assert arrow == expr
+    src = {i: g for i, _t, g in HOSTILE_ROWS}
+    assert got == sorted((i, len(sh), src[i], py_md5_hash(s))
+                         for i, sh in _py_index(3, False).items()
+                         for s in sh)
+    assert [r for r in got if r[0] == 1] == [(1, 1, "s0", py_md5_hash(""))]
 
     # decontam form: no count, '' dropped
-    arrow2 = sorted(map(tuple, shingle_index_arrow(
+    got5 = sorted(map(tuple, shingle_index_arrow(
         hostile, "doc_id", "text", 5, with_count=False,
         drop_empty=True).collect()))
-    sh5 = dedup.with_shingles(hostile, "text", 5)
-    expr2 = sorted(map(tuple, sh5.select(
-        "doc_id",
-        F.explode(F.expr(
-            f"transform(filter(shingles, s -> s <> ''), "
-            f"s -> {spark_md5_hash('s')})")).alias("shingle")).collect()))
-    assert arrow2 == expr2
+    assert got5 == sorted((i, py_md5_hash(s))
+                          for i, sh in _py_index(5, True).items()
+                          for s in sh)
+    ids = {r[0] for r in got + got5}
+    assert 2 not in ids                   # NULL text: no index rows
+    assert 1 not in {r[0] for r in got5}  # empty text: '' dropped
 
 
-def test_jaccard_and_decontam_arrow_path_parity(spark, hostile, monkeypatch):
-    """End-to-end: the full operators agree between the Arrow kernel
-    path (default) and the expression fallback."""
-    def run_all():
-        jac = sorted(map(tuple, dedup.jaccard_pairs(
-            hostile, threshold=0.01, within_col="source",
-            max_df=200).collect()))
-        bench = hostile.filter(F.col("doc_id") < 4).select(
-            F.col("doc_id").alias("bench_id"), "text")
-        dec = sorted(map(tuple, dedup.decontaminate(
-            hostile, bench, n=3, min_overlap=1).collect()))
-        lsh = sorted(map(tuple, dedup.minhash_near_duplicates(
-            hostile, threshold=0.2).collect()))
-        return jac, dec, lsh
+def test_jaccard_and_decontam_arrow_path_parity(spark, hostile):
+    """End-to-end: jaccard_pairs, decontaminate and
+    minhash_near_duplicates on hostile text equal their Python twins."""
+    src = {i: g for i, _t, g in HOSTILE_ROWS}
+    sh3 = _py_index(3, False)
+    jac = {(r.doc_a, r.doc_b): r.jaccard for r in dedup.jaccard_pairs(
+        hostile, threshold=0.01, within_col="source", max_df=200).collect()}
+    want = {}
+    for a, b in itertools.combinations(sorted(sh3), 2):
+        inter = len(sh3[a] & sh3[b])
+        if src[a] == src[b] and inter:
+            j = inter / (len(sh3[a]) + len(sh3[b]) - inter)
+            if round(j, 6) >= 0.01:
+                want[(a, b)] = j
+    assert jac.keys() == want.keys() and len(jac) > 0
+    assert all(abs(jac[p] - want[p]) < 1e-6 for p in jac)
 
-    _with_env(monkeypatch, True)
-    on = run_all()
-    _with_env(monkeypatch, False)
-    off = run_all()
-    assert on == off
-    assert len(on[0]) > 0 or len(on[1]) > 0  # something actually fired
+    bench = hostile.filter(F.col("doc_id") < 4).select(
+        F.col("doc_id").alias("bench_id"), "text")
+    dec = sorted(map(tuple, dedup.decontaminate(
+        hostile, bench, n=3, min_overlap=1).collect()))
+    sh3d = _py_index(3, True)
+    assert dec == sorted(
+        (c, b, len(sh3d[c] & sh3d[b]))
+        for c in sh3d for b in sh3d if b < 4 and sh3d[c] & sh3d[b])
+    assert dec
+
+    lsh = {(r.doc_a, r.doc_b): r.est_jaccard
+           for r in dedup.minhash_near_duplicates(
+               hostile, threshold=0.2).collect()}
+    sig = {i: _py_minhash(t, k=32) for i, t, _src in HOSTILE_ROWS
+           if t is not None}
+    want_lsh = {}
+    for a, b in itertools.combinations(sorted(sig), 2):
+        if any(sig[a][j:j + 4] == sig[b][j:j + 4] for j in range(0, 32, 4)):
+            est = sum(x == y for x, y in zip(sig[a], sig[b])) / 32
+            if est >= 0.2:
+                want_lsh[(a, b)] = est
+    assert lsh == want_lsh

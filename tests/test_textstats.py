@@ -66,6 +66,14 @@ def test_profile(documents):
 
 
 def test_with_textstats_equals_individual_ops(spark, documents):
+    """The Arrow kernel behind with_textstats == the individual JVM ops
+    on the real table PLUS hostile rows: empty text, unicode (code-point
+    length, astral chars, Kelvin sign lowering into ASCII k), folds,
+    ties. NULL text is pinned separately: the fused pass gives
+    (0, 0.25, 0, 'unk') where the individual ops give
+    (NULL, 0.0, NULL, 'unk')."""
+    from pyspark.sql import functions as F
+
     from fastpasta_spark.operators.textstats import (
         fingerprint,
         language_id,
@@ -74,13 +82,25 @@ def test_with_textstats_equals_individual_ops(spark, documents):
         with_textstats,
     )
 
-    d = documents.limit(80)
-    fused = with_textstats(d).select(
-        "doc_id", "n_tokens", "quality", "fingerprint", "lang_pred")
-    chained = language_id(fingerprint(quality_score(token_count(d)))).select(
-        "doc_id", "n_tokens", "quality", "fingerprint", "lang_pred")
-    assert sorted(map(tuple, fused.collect())) == \
-        sorted(map(tuple, chained.collect()))
+    hostile = spark.createDataFrame(
+        [(900001, None), (900002, ""), (900003, "   \t\n  "),
+         (900004, "the of and to in a is it that for"),   # all stopwords
+         (900005, "der die und le la el es de que"),      # lang tie mix
+         (900006, "café 中文 \U0001F600 naïve"),  # astral
+         (900007, "Kelvin İstanbul A1B2"),      # K, dotted I
+         (900008, "x" * 6000), (900009, "ab " * 100)],
+        "doc_id long, text string")
+    d = documents.select(F.col("doc_id").cast("long"), "text") \
+        .unionByName(hostile)
+    cols = ("doc_id", "n_tokens", "quality", "fingerprint", "lang_pred")
+    fused = {r[0]: tuple(r[1:])
+             for r in with_textstats(d).select(*cols).collect()}
+    chained = {r[0]: tuple(r[1:]) for r in language_id(fingerprint(
+        quality_score(token_count(d)))).select(*cols).collect()}
+    assert fused.pop(900001) == (0, 0.25, 0, "unk")
+    assert chained.pop(900001) == (None, 0.0, None, "unk")
+    assert fused == chained
+    assert fused[900002][0] == 0 and fused[900002][3] == "unk"
 
 
 def test_repetition_ratio_and_patterns(spark):
@@ -555,41 +575,3 @@ def test_gopher_rules_hostile_property(spark):
            .collect()}
     for i, t in docs:
         assert got[i] == py_gopher_flags(t), (i, t, got[i])
-
-
-def test_with_textstats_arrow_matches_expression(spark, documents,
-                                                 monkeypatch):
-    """Round-8: with_textstats routes to the Arrow kernel by default.
-    Pin kernel == expression on the real table PLUS hostile rows:
-    NULL text (n_tokens/fingerprint 0 — the zero struct's non-nullable
-    fields coerce the NULL aggregates; quality 0.25 via least()'s
-    NULL-skip; lang 'unk'), empty text, unicode (code-point length,
-    astral chars, Kelvin sign lowering into ASCII k), folds, ties."""
-    from pyspark.sql import functions as F
-
-    hostile = spark.createDataFrame(
-        [(900001, None), (900002, ""), (900003, "   \t\n  "),
-         (900004, "the of and to in a is it that for"),   # all stopwords
-         (900005, "der die und le la el es de que"),      # lang tie mix
-         (900006, "café 中文 \U0001F600 naïve"),  # astral
-         (900007, "Kelvin İstanbul A1B2"),      # K, dotted I
-         (900008, "x" * 6000), (900009, "ab " * 100)],
-        "doc_id long, text string")
-    base = documents.select(F.col("doc_id").cast("long"), "text") \
-        .unionByName(hostile)
-
-    def snap():
-        return sorted(
-            (r.doc_id, r.n_tokens, r.quality, r.fingerprint, r.lang_pred)
-            for r in textstats.with_textstats(base).select(
-                "doc_id", "n_tokens", "quality", "fingerprint",
-                "lang_pred").collect())
-
-    arrow = snap()
-    monkeypatch.setenv("FASTPASTA_ARROW_TEXT", "0")
-    expr = snap()
-    assert arrow == expr
-    d = {t[0]: t[1:] for t in arrow}
-    assert d[900001] == (0, 0.25, 0, "unk")
-    assert d[900002][0] == 0 and d[900002][3] == "unk"
-
