@@ -2239,8 +2239,9 @@ def _duckdb_cosine(a: str, b: str, dim: int = 64) -> str:
 
 
 def _duckdb_lsh_bucket(vec: str, table: int, n_planes: int) -> str:
-    """DuckDB twin of similarity._bucket_expr — SAME projection literals
-    (one definition here; a drifted copy would silently break parity)."""
+    """DuckDB twin of the Arrow bucket kernel (similarity._lsh_bucket_udf)
+    — SAME projection planes, rounded to the same 9 decimals (one
+    definition here; a drifted copy would silently break parity)."""
     from fastpasta_spark.operators.similarity import _projection_matrix
 
     terms = []

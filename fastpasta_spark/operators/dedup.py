@@ -94,6 +94,10 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id", bands: int = 8,
         only (doc_a, doc_b, est) ever shuffles afterwards
       * cross-band duplicates collapse via groupBy, not dropDuplicates
         over signature arrays
+      * NULL signatures (NULL text) are dropped before banding:
+        concat_ws skips a NULL slice, so they would share one bucket
+        per band and self-join into N*(N-1)/2 pairs with a NULL
+        estimate
     Returns (doc_a, doc_b, est_jaccard) with doc_a < doc_b.
     """
     band_exprs = [
@@ -103,8 +107,9 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id", bands: int = 8,
         ))).alias("bucket")
         for b in range(bands)
     ]
-    exploded = df.select(F.col(id_col), F.col(minhash_col),
-                         F.explode(F.array(*band_exprs)).alias("bucket"))
+    exploded = df.filter(F.col(minhash_col).isNotNull()).select(
+        F.col(id_col), F.col(minhash_col),
+        F.explode(F.array(*band_exprs)).alias("bucket"))
     hot = (exploded.groupBy("bucket").agg(F.count(F.lit(1)).alias("_bsz"))
            .filter(F.col("_bsz") > max_bucket).select("bucket"))
     buckets = exploded.join(F.broadcast(hot), "bucket", "left_anti")

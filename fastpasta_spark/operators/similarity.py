@@ -1,14 +1,14 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, as a 100 TB training pipeline needs:
-  * brute-force cosine top-k — exact baseline; a broadcast nested-loop
-    of (queries x corpus) where queries are SMALL (broadcast) and the
-    corpus streams through one scan. All arithmetic is JVM-side
-    (zip_with/aggregate inside codegen) — no Python in the hot path.
-  * LSH-bucketed ANN — sign-random-projection buckets; candidate
-    generation is a bucket equi-join, ranking only within buckets.
-    Projection vectors derive from the portable md5 hash so the
-    partitioning is deterministic across engines/runs.
+Brute-force cosine top-k, LSH- and IVF-bucketed approximate top-k, and
+embedding / semantic (k-means) near-duplicates. Every vector kernel is
+an Arrow-batched numpy UDF in float64: pair cosines, query-matrix
+cosines, LSH bucket ids, codebook assignment and centroid sims.
+Lambda-bearing SQL (zip_with/aggregate) is interpreted per element and
+never reaches codegen, so the vector arithmetic runs in numpy.
+Projection planes derive from the portable md5 hash, so bucketing is
+deterministic across engines and runs. Codebooks, projection planes and
+small query sets ride in the kernels' closures: no join, no shuffle.
 """
 
 from __future__ import annotations
@@ -24,70 +24,10 @@ from fastpasta_spark.functions.cache import tracked_persist
 
 from fastpasta_spark.functions.hashing import py_md5_hash
 
-# Ceiling for inlining a codebook / projection matrix as SQL literals
-# (round-3 verdict #2): below it, the literal array-of-arrays is the
-# right zero-shuffle plan — the expression evaluates inside codegen,
-# equivalent to broadcasting a tiny table. Beyond it, the EXPRESSION
-# TREE is the problem (k*dim literal nodes hit analysis/codegen long
-# before the data does — SemDeDup-realistic k~10^4-10^5 at dim 768
-# would be tens of millions of nodes), so the operators below switch to
-# an Arrow-batched pandas UDF closing over a broadcast numpy codebook:
-# same math in float64, same lowest-index tie-break, one Python stage
-# instead of a codegen expression. Tests pin path parity.
-#
-# Threshold MEASURED in round 5 (scripts/codebook_bench.py ->
-# BENCH/CODEBOOK.md, 50k rows x dim=768, local[32], min-of-3): the
-# literal path's cost grows linearly in k*dim while the Arrow path is
-# flat until the codebook itself is large — literal/Arrow parity sits
-# at k*dim ~1.5-3k (1536: 1.27s vs 1.07s; 6144: 3.40s vs 0.59s;
-# 98304: 54.2s vs 0.55s), and the Arrow path handles k*dim=7.7M
-# (k=10^4, dim=768) in 8.3s. maxRecordsPerBatch is a non-factor for
-# the vector UDF (0.94-1.01s across 1k-16k at k=1024). 2048 keeps
-# genuinely tiny codebooks (LSH planes, small k-means) JVM-side with
-# zero Python-worker round-trips and routes everything else to Arrow.
-LITERAL_CODEBOOK_MAX = 2048
-
-# LSH bucketing routes to the Arrow twin EARLIER than the codebook
-# paths: the literal _bucket_expr is not just a big expression tree, it
-# is n_planes interpreted dot products per (row, table) — lambda-bearing
-# exprs never reach codegen, so at the round-7 bench shape (n_tables=8 x
-# n_planes=4 x dim=64 = 2048, exactly at LITERAL_CODEBOOK_MAX) the
-# literal path burned ~123M interpreted element evals over a 20k-row
-# corpus while the parity-pinned numpy einsum twin does the same
-# projections in one batched matmul (round-8 A/B: lsh_ann 7.5s -> see
-# OPTIMIZATION_r08.md). Genuinely tiny matrices stay literal (zero
-# Python round-trips). The effective threshold is
-# min(LITERAL_CODEBOOK_MAX, LSH_BUCKET_LITERAL_MAX) so tests that force
-# the Arrow path by zeroing LITERAL_CODEBOOK_MAX still cover both.
-LSH_BUCKET_LITERAL_MAX = 256
-
-
-def _lsh_literal_max() -> int:
-    return min(LITERAL_CODEBOOK_MAX, LSH_BUCKET_LITERAL_MAX)
-
-# try_divide, not '/': under ANSI mode (Spark 4 default) even DOUBLE
-# 0.0/0.0 raises DIVIDE_BY_ZERO, so a single all-zero embedding would
-# crash every literal cosine path; try_divide degrades it to NULL sim,
-# which threshold filters and DESC orderings (nulls last) already handle.
-# nanvl(.., NULL): try_divide only NULLs a ZERO divisor — a genuine NaN
-# component (float('nan') in the array, not a NULL element) propagates
-# NaN through the aggregates and NaN/NaN stays NaN, which compares
-# GREATER than any threshold in Spark; the Arrow twins emit NULL for
-# NaN-component vectors, so the literal path must too (path parity
-# pinned in tests/test_similarity.py).
-COSINE_EXPR = (
-    "nanvl(try_divide(aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * y), "
-    "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v), "
-    "sqrt(aggregate({a}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * v)) * "
-    "sqrt(aggregate({b}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * v))), "
-    "CAST(NULL AS DOUBLE))"
-)
-
 
 def _pair_cosine_udf():
-    """Arrow-batched numpy twin of COSINE_EXPR over a (vec, vec) column
-    pair — the one pair-scoring path (COSINE_EXPR itself serves the
-    literal codebook paths and the parity test).
+    """Arrow-batched numpy cosine over a (vec, vec) column pair — the
+    one pair-scoring path.
 
     Lambda-bearing SQL expressions are NOT whole-stage-codegen'd: every
     element of every zip_with/aggregate is an interpreted expression
@@ -96,13 +36,12 @@ def _pair_cosine_udf():
     bound on expression interpretation. One einsum per Arrow batch does
     the same math in float64.
 
-    NULL-semantics contract (exactly COSINE_EXPR's, parity-pinned in
-    tests/test_similarity.py::test_pair_cosine_arrow_matches_literal):
-    NULL when either vector is NULL, lengths differ (zip_with pads with
-    NULL -> NULL dot), any component is NULL/NaN/Inf (aggregates go
-    NULL/NaN -> nanvl), or the norm product is 0 (try_divide).
-    Summation order differs from the literal left fold by ~1 ulp; every
-    consumer rounds to 6 dp before use, same as the codebook twins.
+    NULL-semantics contract (that of the JVM reference cosine in
+    tests/test_similarity.py, pinned by
+    test_pair_cosine_arrow_matches_literal): NULL when either vector is
+    NULL, lengths differ or are 0, any component is NULL/NaN/Inf, or
+    the norm product is 0. Never NaN: NaN compares GREATER than any
+    threshold in Spark. Every consumer rounds to 6 dp before use.
     """
 
     @F.pandas_udf("double")
@@ -139,8 +78,7 @@ def _pair_cosine_udf():
 
 def cosine_sim_col(a: str, b: str):
     """Cosine similarity Column between two array columns, computed by
-    the Arrow numpy kernel (_pair_cosine_udf) with COSINE_EXPR's NULL
-    semantics."""
+    the Arrow numpy kernel (_pair_cosine_udf)."""
     return _pair_cosine_udf()(F.col(a), F.col(b))
 
 
@@ -285,63 +223,49 @@ def _projection_matrix(dim: int, n_planes: int, table: int = 0) -> list[list[flo
     return planes
 
 
-def _bucket_expr(vec_col: str, dim: int, n_planes: int, table: int) -> str:
-    planes = _projection_matrix(dim, n_planes, table)
-    lits = ", ".join(
-        "array(" + ", ".join(f"CAST({v:.9f} AS DOUBLE)" for v in row) + ")"
-        for row in planes
-    )
-    # nanvl(dot, -1): a genuine NaN component makes the projection NaN,
-    # and NaN > 0 is TRUE in Spark (NaN sorts above everything) — which
-    # would put NaN vectors in the all-ONES-signs bucket while the numpy
-    # twin (NaN > 0 is False) lands them on the all-zero-signs offset
-    # bucket like every other degraded row. Coerce NaN to a negative dot
-    # so both paths agree; NULL dots (interior NULL element) already
-    # contribute 0 via IF(NULL > 0).
-    return (
-        f"aggregate(sequence(0, {n_planes - 1}), {table * (1 << n_planes)}L, "
-        f"(acc, p) -> acc + "
-        f"IF(nanvl(aggregate(zip_with(element_at(array({lits}), p + 1), {vec_col}, "
-        "(w, x) -> w * CAST(x AS DOUBLE)), CAST(0.0 AS DOUBLE), "
-        "(a, v) -> a + v), CAST(-1.0 AS DOUBLE)) > 0, shiftleft(1L, p), 0L))"
-    )
+def _lsh_planes(dim: int, n_planes: int, tables) -> tuple:
+    """(planes (T, P, dim), table offsets (T,), sign weights (P,)) for
+    the given hash tables. Each plane weight is rounded to 9 decimals,
+    the precision the DuckDB oracle inlines, so a projection within
+    ~1e-9 of zero takes the same sign on both engines. Offsets
+    table * 2^n_planes keep the bucket ids of different tables
+    disjoint."""
+    mats = np.array([[[float(f"{v:.9f}") for v in row]
+                      for row in _projection_matrix(dim, n_planes, t)]
+                     for t in tables], dtype=np.float64)
+    offsets = np.array([t << n_planes for t in tables], dtype=np.int64)
+    weights = (1 << np.arange(n_planes)).astype(np.int64)
+    return mats, offsets, weights
+
+
+def _lsh_bucket_ids(mask: np.ndarray, v: np.ndarray, planes: tuple
+                    ) -> np.ndarray:
+    """(len(mask), T) bucket ids: bit p of a table's id is set where
+    the projection onto plane p is > 0 (a NaN projection is not).
+    ``v`` holds the rows where ``mask`` is set (see _safe_matrix);
+    every other row (NULL, ragged or empty vector) keeps the
+    all-zero-signs bucket, i.e. the table offset."""
+    mats, offsets, weights = planes
+    ids = np.tile(offsets, (len(mask), 1))
+    if len(v):
+        signs = np.einsum("nd,tpd->ntp", v, mats) > 0   # (n, T, P)
+        ids[mask] = (signs * weights[None, None, :]).sum(axis=2) \
+            + offsets[None, :]
+    return ids
 
 
 def _lsh_bucket_udf(dim: int, n_planes: int, tables: list[int]):
-    """pandas UDF: embedding -> [bucket id per table] — the
-    large-matrix twin of _bucket_expr (same md5-derived planes, same
-    sign rule, same table * 2^n_planes disjoint offsets)."""
+    """pandas UDF: embedding -> [bucket id per table] (md5-derived
+    planes, _lsh_bucket_ids's sign rule and degraded-row buckets)."""
     from pyspark.sql import types as T
 
-    # IDENTICAL planes to the literal path: _bucket_expr inlines each
-    # weight as CAST({v:.9f} AS DOUBLE), so the Arrow twin must round
-    # the same way or a vector whose projection sits within ~1e-9 of
-    # zero flips sign between paths (and vs the DuckDB oracle replay)
-    mats = np.array([[[float(f"{v:.9f}") for v in row]
-                      for row in _projection_matrix(dim, n_planes, t)]
-                     for t in tables], dtype=np.float64)  # (T, P, dim)
-    offsets = np.array([t << n_planes for t in tables], dtype=np.int64)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
+    planes = _lsh_planes(dim, n_planes, tables)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def buckets(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        mask, v = _safe_matrix(vecs, mats.shape[2])
-        # NULL/ragged embeddings: the literal _bucket_expr degrades to
-        # the all-zero-signs bucket per table (every IF(NULL > 0, ...)
-        # contributes 0, leaving the table offset) — the Arrow twin must
-        # land such rows in the SAME buckets, not drop them, or crossing
-        # LITERAL_CODEBOOK_MAX would change candidate generation on
-        # corrupt vectors (parity pinned in test_similarity).
-        out: list = [offsets] * len(vecs)
-        if len(v):
-            signs = np.einsum("nd,tpd->ntp", v, mats) > 0   # (n, T, P)
-            ids = (signs * weights[None, None, :]).sum(axis=2) \
-                + offsets[None, :]
-            for pos, row in zip(np.nonzero(mask)[0], ids):
-                out[pos] = row
-        return pd.Series(out, dtype=object)
+        mask, v = _safe_matrix(vecs.tolist(), dim)
+        return pd.Series(list(_lsh_bucket_ids(mask, v, planes)),
+                         dtype=object)
 
     return buckets
 
@@ -350,19 +274,12 @@ def with_lsh_bucket(
     df: DataFrame, dim: int, n_planes: int = 8, vec_col: str = "embedding",
     out_col: str = "lsh_bucket", table: int = 0,
 ) -> DataFrame:
-    """Sign-random-projection bucket id as a column (one hash table).
-
-    A small projection matrix (n_planes*dim <= LITERAL_CODEBOOK_MAX) is
-    inlined as a literal array-of-arrays — evaluated inside codegen;
-    equivalent to broadcasting it. Larger matrices switch to the
-    Arrow-batched numpy path (see LITERAL_CODEBOOK_MAX). Bucket ids of
+    """Sign-random-projection bucket id as a column (one hash table),
+    computed by the Arrow kernel _lsh_bucket_udf. Bucket ids of
     different tables are disjoint (offset by table * 2^n_planes).
     """
-    if n_planes * dim > _lsh_literal_max():
-        return df.withColumn(out_col, F.get(
-            _lsh_bucket_udf(dim, n_planes, [table])(F.col(vec_col)),
-            F.lit(0)))
-    return df.withColumn(out_col, F.expr(_bucket_expr(vec_col, dim, n_planes, table)))
+    return df.withColumn(out_col, F.get(
+        _lsh_bucket_udf(dim, n_planes, [table])(F.col(vec_col)), F.lit(0)))
 
 
 def with_lsh_buckets(
@@ -371,17 +288,11 @@ def with_lsh_buckets(
 ) -> DataFrame:
     """Multi-table LSH: one row per (vector, table) with that table's
     bucket id — candidates are unioned across tables (standard L-tables
-    construction; raises recall at the cost of L bucket joins). The
-    n_tables*n_planes*dim projection literals switch to the Arrow path
-    past LITERAL_CODEBOOK_MAX like every codebook here."""
-    if n_tables * n_planes * dim > _lsh_literal_max():
-        return df.withColumn(out_col, F.explode(
-            _lsh_bucket_udf(dim, n_planes, list(range(n_tables)))(
-                F.col(vec_col))))
-    exprs = ", ".join(
-        _bucket_expr(vec_col, dim, n_planes, t) for t in range(n_tables)
-    )
-    return df.withColumn(out_col, F.explode(F.expr(f"array({exprs})")))
+    construction; raises recall at the cost of L bucket joins). One
+    Arrow pass computes every table's id."""
+    return df.withColumn(out_col, F.explode(
+        _lsh_bucket_udf(dim, n_planes, list(range(n_tables)))(
+            F.col(vec_col))))
 
 
 def embedding_near_duplicates(
@@ -456,20 +367,18 @@ def ivf_centroids(corpus: DataFrame, n_lists: int,
 
 
 def _codebook_matrix(centroids: list) -> np.ndarray:
-    """(k, dim) float64 matrix; row index == list_id (both codebook
-    paths rely on ivf_centroids' 0-based contiguous list_ids)."""
+    """(k, dim) float64 matrix; row index == list_id (the codebook
+    kernels rely on ivf_centroids' 0-based contiguous list_ids)."""
     assert [lid for lid, _ in centroids] == list(range(len(centroids))), \
         "codebook list_ids must be contiguous 0-based"
     return np.array([v for _, v in centroids], dtype=np.float64)
 
 
-def _safe_matrix(vecs, dim: int):
-    """(valid_mask, (n_valid, dim) float64 matrix) from a pandas Series
-    of embeddings — rows that are NULL or the wrong length are masked
-    out instead of crashing the whole Arrow batch (the literal-
-    expression paths degrade per-row on such input; the UDF paths must
-    not be worse)."""
-    vals = vecs.tolist()
+def _safe_matrix(vals: list, dim: int):
+    """(valid_mask, (n_valid, dim) float64 matrix) from a list of
+    embeddings — rows that are NULL or the wrong length are masked out
+    instead of crashing the whole Arrow batch; each kernel gives them
+    its own degraded result. A NULL element becomes a NaN component."""
     mask = np.array([v is not None and len(v) == dim for v in vals],
                     dtype=bool)
     good = [vals[i] for i in np.nonzero(mask)[0]]
@@ -480,31 +389,25 @@ def _safe_matrix(vecs, dim: int):
 
 def _assign_udf(centroids: list, nprobe: int):
     """pandas UDF: embedding -> the nprobe nearest list_ids (cosine,
-    ties broken toward the LOWER list_id — np.argsort(kind='stable')
-    matches the literal path's (negsim, list_id) array_sort order)."""
+    ties broken toward the LOWER list_id by a stable argsort)."""
     from pyspark.sql import types as T
 
     mat = _codebook_matrix(centroids)
     cnorm = np.sqrt((mat * mat).sum(axis=1))
 
-    # NULL/ragged/zero embeddings: the literal path coalesces NULL
-    # negsim to +inf, so degenerate sims rank last and an all-degenerate
-    # row keeps codebook order (list_ids 0..nprobe-1) via the list_id
-    # tie-break — the Arrow twin emits the same (NaN sorts last in
-    # argsort; all-NaN rows keep stable index order; parity pinned in
-    # test_similarity on null / short / long / empty / zero vectors).
+    # NULL/ragged/empty embeddings, and every sim that is NaN (zero
+    # vector, zero centroid, NaN component): NaN ranks last, and a row
+    # with no valid sim keeps codebook order (list_ids 0..nprobe-1) —
+    # the JVM reference's order (pinned in test_similarity on null /
+    # short / long / empty / interior-NULL / zero / NaN vectors)
     invalid = np.arange(min(nprobe, len(mat)), dtype=np.int32)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def assign(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        mask, v = _safe_matrix(vecs, mat.shape[1])
+        mask, v = _safe_matrix(vecs.tolist(), mat.shape[1])
         out: list = [invalid] * len(vecs)
         if len(v):
             with np.errstate(invalid="ignore", divide="ignore"):
-                # zero vector -> all-NaN row; stable argsort keeps
-                # codebook order, same as the literal path's NULL negsim
                 sims = (v @ mat.T) / (np.sqrt((v * v).sum(axis=1, keepdims=True))
                                       * cnorm[None, :])
             order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
@@ -517,48 +420,19 @@ def _assign_udf(centroids: list, nprobe: int):
 
 def _assign_lists(df: DataFrame, centroids: list, nprobe: int,
                   vec_col: str) -> DataFrame:
-    """Attach the nprobe nearest list_ids to every row.
+    """Attach the nprobe nearest list_ids to every row (one row per
+    list_id when nprobe > 1).
 
-    Small codebooks (k*dim <= LITERAL_CODEBOOK_MAX): the centroid table
-    (bounded: n_lists rows, collected once on the driver like any
-    quantizer codebook) is inlined as a literal array-of-arrays, so the
-    per-row argmin is a pure codegen expression — NO shuffle and no
-    per-row join. A window-rank formulation here would exchange the
-    whole corpus just to rank n_lists candidates per row.
-
-    Large codebooks: an Arrow-batched pandas UDF closing over the numpy
-    codebook (ships to executors once via the closure/broadcast) — the
-    scan is still one pass with no shuffle; only the argmin leaves
-    codegen. See LITERAL_CODEBOOK_MAX for why.
+    The codebook (n_lists rows, collected once on the driver like any
+    quantizer codebook) rides in the Arrow kernel's closure, so the
+    argmax is one scan with no shuffle and no per-row join. A
+    window-rank formulation would exchange the whole corpus just to
+    rank n_lists candidates per row.
     """
-    k = len(centroids)
-    dim = len(centroids[0][1]) if centroids else 0
-    if k * dim > LITERAL_CODEBOOK_MAX:
-        ranked = _assign_udf(centroids, nprobe)(F.col(vec_col))
-        if nprobe == 1:
-            return df.withColumn("list_id", F.get(ranked, F.lit(0)))
-        return df.withColumn("list_id", F.explode(ranked))
-    cent_lit = ", ".join(
-        "array(" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in vec) + ")"
-        for _, vec in centroids
-    )
-    # coalesce NULL negsim (corrupt vector OR degenerate zero centroid,
-    # reachable since COSINE_EXPR's try_divide) to +inf so it ranks
-    # LAST: struct array_sort puts a NULL field FIRST, which would let
-    # a single zero centroid win every argmax; the Arrow twin's argsort
-    # already sorts the equivalent NaN last, and ties at +inf fall back
-    # to list_id order on both paths (all-degenerate -> codebook order)
-    ranked = (
-        "slice(array_sort(transform(array({cents}), (c, i) -> "
-        "named_struct('negsim', coalesce(-({cos}), "
-        "CAST('Infinity' AS DOUBLE)), 'list_id', i))), 1, {nprobe})"
-    ).format(cents=cent_lit, cos=COSINE_EXPR.format(a=vec_col, b="c"),
-             nprobe=nprobe)
+    ranked = _assign_udf(centroids, nprobe)(F.col(vec_col))
     if nprobe == 1:
-        return df.withColumn(
-            "list_id", F.expr(f"element_at({ranked}, 1).list_id"))
-    return df.withColumn(
-        "list_id", F.explode(F.expr(f"transform({ranked}, s -> s.list_id)")))
+        return df.withColumn("list_id", F.get(ranked, F.lit(0)))
+    return df.withColumn("list_id", F.explode(ranked))
 
 
 # corpus-sized knob defaults need a count() job; LOOP CALLERS should
@@ -620,7 +494,7 @@ def ivf_topk(
     cent = sorted(
         ((r.list_id, list(r.centroid))
          for r in ivf_centroids(corpus, n_lists, id_col, vec_col).collect()),
-    )  # literal position i == list_id (0-based by construction)
+    )  # row i == list_id (0-based by construction)
     c = _assign_lists(
         corpus.select(F.col(id_col).alias("neighbor_id"),
                       F.col(vec_col).alias("c_vec")),
@@ -652,9 +526,9 @@ def kmeans_fit(corpus: DataFrame, k: int = 16, iters: int = 2,
     SemDeDup-style semantic dedup.
 
     Scale shape per iteration (the only data-sized work):
-      * assignment — argmax-cosine against the literal centroid
-        codebook, a pure codegen expression per row (no shuffle, no
-        join; same `_assign_lists` machinery as IVF)
+      * assignment — argmax-cosine against the centroid codebook in
+        the Arrow kernel's closure, one scan (no shuffle, no join;
+        same `_assign_lists` machinery as IVF)
       * update — posexplode to (list_id, pos, val) and ONE map-side-
         combined groupBy(list_id, pos).avg; k*dim tiny rows reach the
         driver (the codebook update, bounded like any quantizer
@@ -671,8 +545,8 @@ def kmeans_fit(corpus: DataFrame, k: int = 16, iters: int = 2,
         (r.list_id, [float(v) for v in r.centroid])
         for r in ivf_centroids(corpus, k, id_col, vec_col).collect())
     if not cent:
-        # an untyped empty array() literal in the assignment expression
-        # would otherwise fail analysis far from the real cause
+        # an empty codebook has no dimension; the assignment kernel
+        # would otherwise fail far from the real cause
         raise ValueError("kmeans_fit: corpus has no vectors")
     src = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
     for _ in range(iters):
@@ -706,31 +580,21 @@ def kmeans_assign(corpus: DataFrame, k: int = 16, iters: int = 2,
     assigned = _assign_lists(
         corpus.select(F.col(id_col), F.col(vec_col).alias("_vec")),
         cent, nprobe=1, vec_col="_vec")
-    dim = len(cent[0][1])
-    if len(cent) * dim > LITERAL_CODEBOOK_MAX:
-        sim_col = _centroid_sim_udf(cent)(F.col("_vec"), F.col("list_id"))
-    else:
-        cent_lit = ", ".join(
-            "array(" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in vec) + ")"
-            for _, vec in cent)
-        sim_col = F.expr(COSINE_EXPR.format(
-            a="_vec", b=f"element_at(array({cent_lit}), list_id + 1)"))
+    sim_col = _centroid_sim_udf(cent)(F.col("_vec"), F.col("list_id"))
     return assigned.select(
         id_col, "list_id", F.round(sim_col, 6).alias("sim"))
 
 
 def _centroid_sim_udf(centroids: list):
-    """pandas UDF (embedding, list_id) -> cosine to that centroid — the
-    large-codebook twin of the literal element_at(array(...), list_id+1)
-    expression in kmeans_assign."""
+    """pandas UDF (embedding, list_id) -> cosine to that centroid, NULL
+    (never NaN) where the cosine is degenerate: NULL, ragged or empty
+    vector, NULL or NaN component, or a zero norm product."""
     mat = _codebook_matrix(centroids)
     cnorm = np.sqrt((mat * mat).sum(axis=1))
 
     @F.pandas_udf("double")
     def csim(vecs: pd.Series, lids: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=np.float64)
-        mask, v = _safe_matrix(vecs, mat.shape[1])
+        mask, v = _safe_matrix(vecs.tolist(), mat.shape[1])
         out = np.full(len(vecs), np.nan)
         if len(v):
             li = lids.to_numpy()[mask].astype(np.int64)
@@ -739,17 +603,12 @@ def _centroid_sim_udf(centroids: list):
             den = np.sqrt((v * v).sum(axis=1)) * cnorm[li]
             with np.errstate(invalid="ignore", divide="ignore"):
                 sims = num / den
-            # NULL (not NaN) wherever the literal COSINE_EXPR yields
-            # SQL NULL: an interior NULL element (NaN components here;
-            # NULL term poisons the literal aggregate) and a zero vector
-            # (den == 0; try_divide -> NULL). NaN must not leak — it
-            # compares GREATER than any threshold in Spark.
+            # NaN must not leak — it compares GREATER than any
+            # threshold in Spark
             pos = np.nonzero(mask)[0]
             ok = ~np.isnan(v).any(axis=1) & (den > 0)
             out[pos[ok]] = sims[ok]
             mask[pos[~ok]] = False
-        # literal COSINE_EXPR yields SQL NULL on null/ragged vectors;
-        # emit None (not NaN) so both paths agree on the sim column
         res: list = [None if not m else s for m, s in zip(mask, out)]
         return pd.Series(res, dtype=object)
 
@@ -811,35 +670,25 @@ def _lsh_matrix_sims_udf(qvecs: list, dim: int, n_planes: int,
         exactly the rows the pair path emitted with NULL sim)
       * candidate, valid cosine             -> float (always <= 1.0)
 
-    Buckets replicate _lsh_bucket_udf bit-for-bit (same {v:.9f}-rounded
-    planes, same sign rule, same table-disjoint offsets; NULL/ragged
-    vectors degrade to the per-table zero-sign offset buckets on BOTH
-    sides). Candidate(r, j) = some table t with equal bucket ids —
-    bucket ids are table-disjoint, so one equality test per table.
-    Cosine NULL contract is _pair_cosine_udf's: NULL/ragged/NaN/Inf
-    vector on either side, or a zero norm product.
+    Buckets are _lsh_bucket_udf's (the shared _lsh_planes and
+    _lsh_bucket_ids; NULL/ragged vectors degrade to the per-table
+    zero-sign offset buckets on BOTH sides). Candidate(r, j) = some
+    table t with equal bucket ids — bucket ids are table-disjoint, so
+    one equality test per table. Cosine NULL contract is
+    _pair_cosine_udf's: NULL/ragged/NaN/Inf vector on either side, or
+    a zero norm product.
     """
-    mats = np.array([[[float(f"{v:.9f}") for v in row]
-                      for row in _projection_matrix(dim, n_planes, t)]
-                     for t in range(n_tables)], dtype=np.float64)
-    offsets = np.array([t << n_planes for t in range(n_tables)],
-                       dtype=np.int64)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
+    planes = _lsh_planes(dim, n_planes, range(n_tables))
 
-    def _buckets(mat_valid: np.ndarray) -> np.ndarray:
-        signs = np.einsum("nd,tpd->ntp", mat_valid, mats) > 0
-        return (signs * weights[None, None, :]).sum(axis=2) + offsets[None, :]
+    def _dense(vals: list) -> tuple:
+        # (valid mask, (len(vals), dim) matrix with zero rows where
+        # invalid, bucket ids)
+        ok, v = _safe_matrix(vals, dim)
+        mat = np.zeros((len(vals), dim), dtype=np.float64)
+        mat[ok] = v
+        return ok, mat, _lsh_bucket_ids(ok, v, planes)
 
-    qn = len(qvecs)
-    q_ok = np.zeros(qn, dtype=bool)
-    q_mat = np.zeros((qn, dim), dtype=np.float64)
-    for j, qv in enumerate(qvecs):
-        if qv is not None and len(qv) == dim:
-            q_ok[j] = True
-            q_mat[j] = np.asarray(qv, dtype=np.float64)
-    qb = np.tile(offsets, (qn, 1))                      # (qn, T)
-    if q_ok.any():
-        qb[q_ok] = _buckets(q_mat[q_ok])
+    q_ok, q_mat, qb = _dense(qvecs)                     # qb: (qn, T)
     with np.errstate(invalid="ignore", over="ignore"):
         q_norm = np.sqrt(np.einsum("ij,ij->i", q_mat, q_mat))
     # degenerate query cosine: invalid vec, non-finite components, or
@@ -848,19 +697,7 @@ def _lsh_matrix_sims_udf(qvecs: list, dim: int, n_planes: int,
 
     @F.pandas_udf("array<double>")
     def lsims(cc: pd.Series) -> pd.Series:
-        vc = cc.tolist()
-        m = len(vc)
-        if m == 0:
-            return pd.Series([], dtype=object)
-        c_ok = np.zeros(m, dtype=bool)
-        c_mat = np.zeros((m, dim), dtype=np.float64)
-        for i, v in enumerate(vc):
-            if v is not None and len(v) == dim:
-                c_ok[i] = True
-                c_mat[i] = np.asarray(v, dtype=np.float64)
-        cb = np.tile(offsets, (m, 1))
-        if c_ok.any():
-            cb[c_ok] = _buckets(c_mat[c_ok])
+        c_ok, c_mat, cb = _dense(cc.tolist())
         # candidate mask: shared bucket in any table (ids table-disjoint)
         cand = (cb[:, None, :] == qb[None, :, :]).any(axis=2)  # (m, qn)
         with np.errstate(invalid="ignore", divide="ignore",

@@ -1,11 +1,12 @@
-"""Uniqueness checks: HLL approx-distinct totals + exact duplicate extraction.
+"""Uniqueness checks: exact duplicate extraction (check_all's 'k' branch
+computes the HLL approx-distinct totals alongside its groups).
 
 north_rule mandate, extending the reference's distinct-set stats
 (`/root/reference/fastpasta/src/stats/rdh_stats.rs:78-103` dedups FEE
 ids on insert — fine for a 2^16 domain, not for 10^12 doc keys).
 
 Design for scale:
-  * totals via ``approx_count_distinct`` (HyperLogLog++, mergeable
+  * totals (in check_all) via ``approx_count_distinct`` (HyperLogLog++, mergeable
     partials, no shuffle of the full key set), and
   * exact duplicate EXTRACTION via hash-partitioned groupBy — sort-free:
     the map-side partial count + AQE-coalesced shuffle only moves
@@ -17,8 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from fastpasta_spark import schema as S
 
 
 def duplicate_keys(docs: DataFrame, key: str = "doc_id") -> DataFrame:
@@ -59,42 +58,3 @@ def salted_duplicate_keys(docs: DataFrame, key: str = "doc_id",
         .filter(F.col("dup_count") > 1)
     )
 
-
-def uniqueness_violations(docs: DataFrame, key: str = "doc_id") -> DataFrame:
-    """E100 violation rows, one per duplicated key (VIOLATION_SCHEMA)."""
-    return duplicate_keys(docs, key).select(
-        F.col(key).alias("doc_id"),
-        F.lit(None).cast("int").alias("span_idx"),
-        F.lit(-1).alias("offset"),
-        F.lit(S.E100_DUPLICATE_KEY).alias("check_code"),
-        F.lit(S.SEV_ERROR).alias("severity"),
-        F.concat(
-            F.lit("duplicate doc_id seen "), F.col("dup_count"), F.lit(" times")
-        ).alias("message"),
-    )
-
-
-def uniqueness_metrics(docs: DataFrame, key: str = "doc_id") -> DataFrame:
-    """(name, value) metrics: exact + HLL distinct, dup rows.
-
-    One aggregation job; the HLL sketch is small enough to
-    merge tree-style at 10^12 keys.
-    """
-    # HLL over a 64-bit pre-hash — rsd=0.01 on raw strings takes a ~10x
-    # slower high-precision path (measured); the hash also tightens the
-    # estimate. Collision probability at 10^12 keys is ~0.03 per sketch
-    # register scale — immaterial for an approximate counter.
-    row = docs.agg(
-        F.count(F.lit(1)).alias("rows_total"),
-        F.countDistinct(key).alias("distinct_exact"),
-        # NULL masked before the pre-hash (xxhash64(NULL) = the seed, a
-        # real value) so hll shares countDistinct's NULLs-don't-count
-        F.approx_count_distinct(
-            F.when(F.col(key).isNotNull(), F.xxhash64(key)),
-            rsd=0.02).alias("distinct_hll"),
-    )
-    return row.selectExpr(
-        "stack(3, 'rows_total', CAST(rows_total AS DOUBLE), "
-        "'doc_id_distinct_exact', CAST(distinct_exact AS DOUBLE), "
-        "'doc_id_distinct_hll', CAST(distinct_hll AS DOUBLE)) AS (name, value)"
-    )

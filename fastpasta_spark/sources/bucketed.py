@@ -37,10 +37,6 @@ def write_bucketed(df: DataFrame, table: str, key: str = "doc_id",
     writer.saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def colocated_join(spark: SparkSession, left_table: str, right_table: str,
                    key: str = "doc_id", how: str = "inner") -> DataFrame:
     """Join two same-bucketed tables on their bucket key — no Exchange

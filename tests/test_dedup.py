@@ -37,6 +37,21 @@ def _py_minhash(text, k=8, n=3):
     return [min(py_mix(h, a, b) for h in hs) for a, b in mix_constants(k)]
 
 
+def _py_banded_pairs(texts, threshold, k=32, rows=4):
+    """Python banded-LSH twin of minhash_near_duplicates over
+    {doc_id: text}: pairs sharing one band of their k-long signatures,
+    with est_jaccard >= threshold. NULL text has no signature."""
+    sig = {i: _py_minhash(t, k=k) for i, t in texts.items() if t is not None}
+    want = {}
+    for a, b in itertools.combinations(sorted(sig), 2):
+        if any(sig[a][j:j + rows] == sig[b][j:j + rows]
+               for j in range(0, k, rows)):
+            est = sum(x == y for x, y in zip(sig[a], sig[b])) / k
+            if est >= threshold:
+                want[(a, b)] = est
+    return want
+
+
 def _py_simhash(text, bits=32):
     """Python twin of the simhash kernel: per bit b, the sign of the sum
     over DISTINCT tokens of +1/-1 by bit b of the 60-bit token hash."""
@@ -132,6 +147,36 @@ def test_lsh_finds_near_duplicates(spark, documents):
     found = {(r.doc_a, r.doc_b) for r in pairs}
     for r in base.collect():
         assert (r.doc_id, f"{r.doc_id}_copy") in found
+
+
+def test_lsh_candidates_skip_null_signatures(spark):
+    """NULL text gives a NULL signature, and concat_ws skips a NULL
+    slice: banded as-is, 30 NULL-text docs would share one bucket per
+    band and self-join into 435 candidate pairs whose NULL estimate
+    the threshold then discards. No candidate may touch them, and the
+    thresholded pairs stay the Python twin's."""
+    from fastpasta_spark.operators.arrowtext import minhash_signature_arrow
+
+    texts = {100 + i: None for i in range(30)}
+    texts.update({
+        1: "the quick brown fox jumps over the lazy dog",
+        2: "the quick brown fox jumps over the lazy dog again",
+        3: "minhash bands hash each slice of the signature",
+        4: "minhash bands hash each slice of the signature twice",
+        5: "an unrelated sentence"})
+    df = spark.createDataFrame(sorted(texts.items()),
+                               "doc_id long, text string")
+    cand = dedup.lsh_candidate_pairs(
+        minhash_signature_arrow(df, k=32, n=3), bands=8,
+        rows_per_band=4).collect()
+    null_pairs = [r for r in cand if texts[r.doc_a] is None
+                  or texts[r.doc_b] is None]
+    assert not null_pairs, len(null_pairs)
+    assert cand
+    got = {(r.doc_a, r.doc_b): r.est_jaccard
+           for r in dedup.minhash_near_duplicates(df, threshold=0.2)
+           .collect()}
+    assert got == _py_banded_pairs(texts, 0.2) and got
 
 
 def test_simhash_deterministic_and_near(spark, documents):
@@ -764,12 +809,5 @@ def test_jaccard_and_decontam_arrow_path_parity(spark, hostile):
     lsh = {(r.doc_a, r.doc_b): r.est_jaccard
            for r in dedup.minhash_near_duplicates(
                hostile, threshold=0.2).collect()}
-    sig = {i: _py_minhash(t, k=32) for i, t, _src in HOSTILE_ROWS
-           if t is not None}
-    want_lsh = {}
-    for a, b in itertools.combinations(sorted(sig), 2):
-        if any(sig[a][j:j + 4] == sig[b][j:j + 4] for j in range(0, 32, 4)):
-            est = sum(x == y for x, y in zip(sig[a], sig[b])) / 32
-            if est >= 0.2:
-                want_lsh[(a, b)] = est
-    assert lsh == want_lsh
+    assert lsh == _py_banded_pairs(
+        {i: t for i, t, _src in HOSTILE_ROWS}, 0.2)

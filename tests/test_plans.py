@@ -295,9 +295,10 @@ def test_unigram_scoring_is_map_only(spark):
 
 
 def test_kmeans_assignment_is_shuffle_free(spark):
-    # the per-row argmax against the literal centroid codebook must be a
-    # pure projection — no Exchange, no join (the scale property that
-    # makes each Lloyd iteration one scan)
+    # the per-row argmax against the centroid codebook (carried in the
+    # Arrow kernel's closure) must stay in the scan's stage — no
+    # Exchange, no join (the scale property that makes each Lloyd
+    # iteration one scan)
     from fastpasta_spark.operators.similarity import (
         _assign_lists,
         ivf_centroids,

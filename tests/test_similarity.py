@@ -2,6 +2,7 @@
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from fastpasta_spark.operators import similarity
 
@@ -236,12 +237,93 @@ def test_kmeans_k_exceeds_corpus(spark):
 
 
 # ---------------------------------------------------------------------------
-# large-codebook Arrow path (round-3 verdict #2): past LITERAL_CODEBOOK_MAX
-# the literal array-of-arrays becomes an expression-tree problem, so the
-# operators switch to an Arrow-batched numpy path; these tests pin (a)
-# exact parity between the two paths and (b) that a genuinely large
-# codebook (k=256, dim=256 -> 65536 would-be literals) compiles and runs.
+# JVM-side references. The Arrow kernels replaced these literal-SQL
+# forms (lambda-bearing expressions never reach codegen, so the literal
+# forms lost at every codebook size measured, BENCH/CODEBOOK.md); they
+# stay here as the in-engine reference the parity tests compare with.
+# The DuckDB oracles in __spark_entry__ remain the cross-engine one.
 # ---------------------------------------------------------------------------
+
+# try_divide, not '/': under ANSI mode (Spark 4 default) even DOUBLE
+# 0.0/0.0 raises DIVIDE_BY_ZERO, so a single all-zero embedding would
+# crash every literal cosine path; try_divide degrades it to NULL sim,
+# which threshold filters and DESC orderings (nulls last) already handle.
+# nanvl(.., NULL): try_divide only NULLs a ZERO divisor — a genuine NaN
+# component (float('nan') in the array, not a NULL element) propagates
+# NaN through the aggregates and NaN/NaN stays NaN, which compares
+# GREATER than any threshold in Spark; the Arrow kernels emit NULL for
+# NaN-component vectors, so the reference must too.
+COSINE_EXPR = (
+    "nanvl(try_divide(aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * y), "
+    "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v), "
+    "sqrt(aggregate({a}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * v)) * "
+    "sqrt(aggregate({b}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * v))), "
+    "CAST(NULL AS DOUBLE))"
+)
+
+
+def _bucket_expr(vec_col: str, dim: int, n_planes: int, table: int) -> str:
+    planes = similarity._projection_matrix(dim, n_planes, table)
+    lits = ", ".join(
+        "array(" + ", ".join(f"CAST({v:.9f} AS DOUBLE)" for v in row) + ")"
+        for row in planes
+    )
+    # nanvl(dot, -1): a genuine NaN component makes the projection NaN,
+    # and NaN > 0 is TRUE in Spark (NaN sorts above everything) — which
+    # would put NaN vectors in the all-ONES-signs bucket while the numpy
+    # twin (NaN > 0 is False) lands them on the all-zero-signs offset
+    # bucket like every other degraded row. Coerce NaN to a negative dot
+    # so both paths agree; NULL dots (interior NULL element) already
+    # contribute 0 via IF(NULL > 0).
+    return (
+        f"aggregate(sequence(0, {n_planes - 1}), {table * (1 << n_planes)}L, "
+        f"(acc, p) -> acc + "
+        f"IF(nanvl(aggregate(zip_with(element_at(array({lits}), p + 1), {vec_col}, "
+        "(w, x) -> w * CAST(x AS DOUBLE)), CAST(0.0 AS DOUBLE), "
+        "(a, v) -> a + v), CAST(-1.0 AS DOUBLE)) > 0, shiftleft(1L, p), 0L))"
+    )
+
+
+def _literal_lsh_buckets(df, dim, n_planes, n_tables):
+    """Reference for similarity.with_lsh_buckets."""
+    exprs = ", ".join(
+        _bucket_expr("embedding", dim, n_planes, t) for t in range(n_tables)
+    )
+    return df.withColumn("lsh_bucket", F.explode(F.expr(f"array({exprs})")))
+
+
+def _cent_lit(centroids) -> str:
+    return ", ".join(
+        "array(" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in vec) + ")"
+        for _, vec in centroids
+    )
+
+
+def _literal_assign_lists(df, centroids, nprobe, vec_col):
+    """Reference for similarity._assign_lists."""
+    # coalesce NULL negsim (corrupt vector OR degenerate zero centroid,
+    # reachable since COSINE_EXPR's try_divide) to +inf so it ranks
+    # LAST: struct array_sort puts a NULL field FIRST, which would let
+    # a single zero centroid win every argmax; the Arrow twin's argsort
+    # already sorts the equivalent NaN last, and ties at +inf fall back
+    # to list_id order on both paths (all-degenerate -> codebook order)
+    ranked = (
+        "slice(array_sort(transform(array({cents}), (c, i) -> "
+        "named_struct('negsim', coalesce(-({cos}), "
+        "CAST('Infinity' AS DOUBLE)), 'list_id', i))), 1, {nprobe})"
+    ).format(cents=_cent_lit(centroids), cos=COSINE_EXPR.format(a=vec_col, b="c"),
+             nprobe=nprobe)
+    if nprobe == 1:
+        return df.withColumn(
+            "list_id", F.expr(f"element_at({ranked}, 1).list_id"))
+    return df.withColumn(
+        "list_id", F.explode(F.expr(f"transform({ranked}, s -> s.list_id)")))
+
+
+def _literal_centroid_sim(centroids):
+    """Reference for similarity._centroid_sim_udf over (_vec, list_id)."""
+    return F.expr(COSINE_EXPR.format(
+        a="_vec", b=f"element_at(array({_cent_lit(centroids)}), list_id + 1)"))
 
 
 def _vecs_df(spark, n, dim, seed=7):
@@ -250,14 +332,13 @@ def _vecs_df(spark, n, dim, seed=7):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-def test_assign_lists_arrow_matches_literal(spark, monkeypatch):
+def test_assign_lists_arrow_matches_literal(spark):
     df = _vecs_df(spark, 60, 16).select(
-        "vec_id", similarity.F.col("embedding").alias("_vec"))
+        "vec_id", F.col("embedding").alias("_vec"))
     cent = similarity.kmeans_fit(
         _vecs_df(spark, 60, 16), k=6, iters=1)
-    lit = sorted((r.vec_id, r.list_id) for r in similarity._assign_lists(
+    lit = sorted((r.vec_id, r.list_id) for r in _literal_assign_lists(
         df, cent, nprobe=2, vec_col="_vec").collect())
-    monkeypatch.setattr(similarity, "LITERAL_CODEBOOK_MAX", 0)
     arrow = sorted((r.vec_id, r.list_id) for r in similarity._assign_lists(
         df, cent, nprobe=2, vec_col="_vec").collect())
     assert lit == arrow
@@ -265,35 +346,38 @@ def test_assign_lists_arrow_matches_literal(spark, monkeypatch):
 
 def test_kmeans_assign_arrow_matches_literal(spark, monkeypatch):
     df = _vecs_df(spark, 50, 12, seed=11)
-    lit = sorted((r.vec_id, r.list_id, r.sim)
-                 for r in similarity.kmeans_assign(df, k=5, iters=1).collect())
-    monkeypatch.setattr(similarity, "LITERAL_CODEBOOK_MAX", 0)
     arrow = sorted((r.vec_id, r.list_id, r.sim)
                    for r in similarity.kmeans_assign(df, k=5, iters=1).collect())
+    # the whole fit and the final sims on the JVM references
+    # (kmeans_assign scores the (_vec, list_id) columns)
+    monkeypatch.setattr(similarity, "_assign_lists", _literal_assign_lists)
+    monkeypatch.setattr(similarity, "_centroid_sim_udf",
+                        lambda cent: lambda _v, _l: _literal_centroid_sim(cent))
+    lit = sorted((r.vec_id, r.list_id, r.sim)
+                 for r in similarity.kmeans_assign(df, k=5, iters=1).collect())
     assert [x[:2] for x in lit] == [x[:2] for x in arrow]
     for a, b in zip(lit, arrow):
         assert abs(a[2] - b[2]) < 2e-6  # 6dp rounding on both paths
 
 
-def test_lsh_buckets_arrow_matches_literal(spark, monkeypatch):
+def test_lsh_buckets_arrow_matches_literal(spark):
     df = _vecs_df(spark, 40, 8, seed=13)
-    lit = sorted((r.vec_id, r.lsh_bucket) for r in similarity.with_lsh_buckets(
-        df, dim=8, n_planes=4, n_tables=3).collect())
-    monkeypatch.setattr(similarity, "LITERAL_CODEBOOK_MAX", 0)
+    lit = sorted((r.vec_id, r.lsh_bucket) for r in _literal_lsh_buckets(
+        df, 8, 4, 3).collect())
     arrow = sorted((r.vec_id, r.lsh_bucket) for r in similarity.with_lsh_buckets(
         df, dim=8, n_planes=4, n_tables=3).collect())
     assert lit == arrow
     one = sorted((r.vec_id, r.lsh_bucket) for r in similarity.with_lsh_bucket(
         df, dim=8, n_planes=4, table=2).collect())
-    monkeypatch.undo()
-    one_lit = sorted((r.vec_id, r.lsh_bucket) for r in similarity.with_lsh_bucket(
-        df, dim=8, n_planes=4, table=2).collect())
+    one_lit = sorted((r.vec_id, r.b) for r in df.select(
+        "vec_id", F.expr(_bucket_expr("embedding", 8, 4, 2)).alias("b"))
+        .collect())
     assert one == one_lit
 
 
 def test_large_codebook_compiles_and_self_assigns(spark):
-    # k=256, dim=256 -> 65536 would-be literals: far past the ceiling,
-    # exercises the auto-routed Arrow path end to end. Every corpus
+    # k=256, dim=256 (65,536 codebook weights, a SemDeDup-scale shape)
+    # through the Arrow kernels end to end. Every corpus
     # vector IS a centroid (ivf_centroids samples k=n of them), so each
     # must assign to itself with sim ~ 1.
     df = _vecs_df(spark, 256, 256, seed=17)
@@ -301,7 +385,6 @@ def test_large_codebook_compiles_and_self_assigns(spark):
         (r.list_id, [float(v) for v in r.centroid])
         for r in similarity.ivf_centroids(df, 256).collect())
     assert len(cent) == 256
-    assert 256 * 256 > similarity.LITERAL_CODEBOOK_MAX
     assigned = similarity._assign_lists(
         df.select("vec_id", similarity.F.col("embedding").alias("_vec")),
         cent, nprobe=1, vec_col="_vec")
@@ -348,14 +431,12 @@ def test_semantic_duplicates_recall_vs_brute_force(spark):
     assert recall >= 0.6, recall
 
 
-def test_null_and_ragged_vectors_literal_arrow_parity(spark, monkeypatch):
-    """Null/ragged embeddings must take the SAME degraded path on both
-    codebook implementations (round-4 advice): the literal expressions
-    send them to the all-zero-signs LSH bucket (table offset) / the
-    first nprobe list_ids (stable sort over all-NULL negsim) with NULL
-    sim — crossing LITERAL_CODEBOOK_MAX must not change candidate
-    generation on corrupt vectors. Also guards the original regression:
-    one bad row must not crash the whole Arrow batch."""
+def test_null_and_ragged_vectors_literal_arrow_parity(spark):
+    """Null/ragged embeddings must take the JVM references' degraded
+    path in the Arrow kernels: the all-zero-signs LSH bucket (table
+    offset) / the first nprobe list_ids (stable sort over all-NULL
+    negsim) with NULL sim. Also guards the original regression: one bad
+    row must not crash the whole Arrow batch."""
     rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, None), (2, [1.0, 2.0]),
             (3, [0.0, 1.0, 0.0, 0.0]), (4, []),
             # correct length, interior NULL element: literal dot/cosine
@@ -374,52 +455,42 @@ def test_null_and_ragged_vectors_literal_arrow_parity(spark, monkeypatch):
             (7, [float("nan"), 1.0, 0.0, 0.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cent = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
-    vdf = df.select("vec_id", similarity.F.col("embedding").alias("_vec"))
+    vdf = df.select("vec_id", F.col("embedding").alias("_vec"))
 
-    def snapshot():
-        assign1 = sorted((r.vec_id, r.list_id) for r in similarity
-                         ._assign_lists(vdf, cent, nprobe=1,
-                                        vec_col="_vec").collect())
-        assign2 = sorted((r.vec_id, r.list_id) for r in similarity
-                         ._assign_lists(vdf, cent, nprobe=2,
-                                        vec_col="_vec").collect())
-        buckets = sorted((r.vec_id, r.lsh_bucket) for r in similarity
-                         .with_lsh_buckets(df, dim=4, n_planes=2,
-                                           n_tables=2).collect())
+    def snapshot(assign_lists, lsh_buckets):
+        assign1 = sorted((r.vec_id, r.list_id) for r in assign_lists(
+            vdf, cent, 1, "_vec").collect())
+        assign2 = sorted((r.vec_id, r.list_id) for r in assign_lists(
+            vdf, cent, 2, "_vec").collect())
+        buckets = sorted((r.vec_id, r.lsh_bucket) for r in lsh_buckets(
+            df, 4, 2, 2).collect())
         return assign1, assign2, buckets
 
-    lit = snapshot()
-    monkeypatch.setattr(similarity, "LITERAL_CODEBOOK_MAX", 0)
-    arrow = snapshot()
+    lit = snapshot(_literal_assign_lists, _literal_lsh_buckets)
+    arrow = snapshot(similarity._assign_lists, similarity.with_lsh_buckets)
     assert lit == arrow
 
     # degraded-row semantics, pinned explicitly: invalid vectors land in
     # list 0 / the per-table offset buckets (0 and 1<<2 = 4)
-    a1 = dict(lit[0])
+    a1 = dict(arrow[0])
     assert a1[0] == 0 and a1[3] == 1
     assert a1[1] == 0 and a1[2] == 0 and a1[4] == 0
     assert a1[5] == 0 and a1[6] == 0 and a1[7] == 0
     bk = {}
-    for vid, b in lit[2]:
+    for vid, b in arrow[2]:
         bk.setdefault(vid, set()).add(b)
     assert bk[1] == bk[2] == bk[4] == {0, 4}
     assert bk[5] == bk[6] == bk[7] == {0, 4}
 
-    # the sim column (kmeans_assign's two implementations): SQL NULL —
-    # not NaN — on both paths for corrupt vectors
+    # the sim column (kmeans_assign's kernel and its reference): SQL
+    # NULL — not NaN — on both for corrupt vectors
     assigned = similarity._assign_lists(vdf, cent, nprobe=1,
                                         vec_col="_vec")
     arrow_sim = {r.vec_id: r.sim for r in assigned.select(
         "vec_id", similarity._centroid_sim_udf(cent)(
-            similarity.F.col("_vec"), similarity.F.col("list_id"))
-        .alias("sim")).collect()}
-    cent_lit = ", ".join(
-        "array(" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in vec) + ")"
-        for _, vec in cent)
+            F.col("_vec"), F.col("list_id")).alias("sim")).collect()}
     lit_sim = {r.vec_id: r.sim for r in assigned.select(
-        "vec_id", similarity.F.expr(similarity.COSINE_EXPR.format(
-            a="_vec", b=f"element_at(array({cent_lit}), list_id + 1)"))
-        .alias("sim")).collect()}
+        "vec_id", _literal_centroid_sim(cent).alias("sim")).collect()}
     for vid in (1, 2, 4, 5, 6):
         assert arrow_sim[vid] is None and lit_sim[vid] is None
     for vid in (0, 3):
@@ -464,35 +535,28 @@ def test_kmeans_zero_vector_does_not_poison_assignment(spark):
     for vid in (0, 1, 3):
         assert got[vid][1] is not None and got[vid][1] > 0.7, got
 
-    # cross-path parity with a zero centroid in the codebook
+    # parity with the JVM reference, a zero centroid in the codebook
     cent = [(0, [0.0, 0.0]), (1, [1.0, 0.0])]
-    vdf = df.select("vec_id", similarity.F.col("embedding").alias("_vec"))
-    lit = sorted((r.vec_id, r.list_id) for r in similarity._assign_lists(
+    vdf = df.select("vec_id", F.col("embedding").alias("_vec"))
+    lit = sorted((r.vec_id, r.list_id) for r in _literal_assign_lists(
         vdf, cent, nprobe=1, vec_col="_vec").collect())
-    import pytest as _pytest
-    mp = _pytest.MonkeyPatch()
-    try:
-        mp.setattr(similarity, "LITERAL_CODEBOOK_MAX", 0)
-        arrow = sorted((r.vec_id, r.list_id) for r in similarity
-                       ._assign_lists(vdf, cent, nprobe=1,
-                                      vec_col="_vec").collect())
-    finally:
-        mp.undo()
+    arrow = sorted((r.vec_id, r.list_id) for r in similarity._assign_lists(
+        vdf, cent, nprobe=1, vec_col="_vec").collect())
     assert lit == arrow
     # valid vectors pick the REAL centroid over the degenerate one
-    d = dict(lit)
+    d = dict(arrow)
     assert d[0] == 1 and d[3] == 1
 
 
 def test_literal_cosine_nan_components_yield_null(spark):
-    """Round-5 advice: the literal COSINE_EXPR must emit SQL NULL (not
+    """Round-5 advice: the reference COSINE_EXPR must emit SQL NULL (not
     NaN) for vectors with genuine NaN components — try_divide only
     NULLs a zero divisor, and NaN compares GREATER than any threshold
     in Spark, so an unguarded NaN sim leaks past threshold filters."""
     rows = [(0, [float("nan"), 1.0], [1.0, 0.0]),
             (1, [1.0, 0.0], [1.0, 0.0])]
     df = spark.createDataFrame(rows, "i long, a array<float>, b array<float>")
-    sim = similarity.F.expr(similarity.COSINE_EXPR.format(a="a", b="b"))
+    sim = similarity.F.expr(COSINE_EXPR.format(a="a", b="b"))
     out = {r.i: r.sim for r in df.select("i", sim.alias("sim")).collect()}
     assert out[0] is None
     assert abs(out[1] - 1.0) < 1e-9
@@ -524,7 +588,7 @@ def test_pair_cosine_arrow_matches_literal(spark, embeddings):
     df = spark.createDataFrame(
         rows, "i long, a array<float>, b array<float>")
     lit = {r.i: r.sim for r in df.select("i", F.round(
-        F.expr(similarity.COSINE_EXPR.format(a="a", b="b")), 6)
+        F.expr(COSINE_EXPR.format(a="a", b="b")), 6)
         .alias("sim")).collect()}
     arrow = {r.i: r.sim for r in df.select("i", F.round(
         similarity.cosine_sim_col("a", "b"), 6).alias("sim")).collect()}
@@ -543,7 +607,7 @@ def test_pair_cosine_arrow_matches_literal(spark, embeddings):
                    F.col("x.vec_id") < F.col("y.vec_id")))
     both = pairs.select(
         F.col("x.vec_id").alias("ia"), F.col("y.vec_id").alias("ib"),
-        F.round(F.expr(similarity.COSINE_EXPR.format(
+        F.round(F.expr(COSINE_EXPR.format(
             a="x.embedding", b="y.embedding")), 6).alias("s_lit"),
         F.round(similarity.cosine_sim_col("x.embedding", "y.embedding"),
                 6).alias("s_arrow"),
