@@ -2135,7 +2135,7 @@ def _sql_alpide_census() -> str:
 def _q_golden_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V1 true form (validate_fields! / golden-stats regression,
     stats/lib.rs:9-31): diff the run's metrics against a golden that is
-    an exact copy EXCEPT docs_seen perturbed by +1 — the full-outer
+    an exact copy EXCEPT docs_seen perturbed by +1 — the
     field-wise diff must flag exactly that one field (E130)."""
     _ship(spark)
     from fastpasta_spark.plans.check_all import check_all

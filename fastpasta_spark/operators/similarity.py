@@ -368,9 +368,13 @@ def ivf_centroids(corpus: DataFrame, n_lists: int,
 
 def _codebook_matrix(centroids: list) -> np.ndarray:
     """(k, dim) float64 matrix; row index == list_id (the codebook
-    kernels rely on ivf_centroids' 0-based contiguous list_ids)."""
+    kernels rely on ivf_centroids' 0-based contiguous list_ids). An
+    empty codebook (empty corpus) is (0, 0): still 2-D, so the kernels
+    assign every row to no list."""
     assert [lid for lid, _ in centroids] == list(range(len(centroids))), \
         "codebook list_ids must be contiguous 0-based"
+    if not centroids:
+        return np.empty((0, 0), dtype=np.float64)
     return np.array([v for _, v in centroids], dtype=np.float64)
 
 

@@ -6,8 +6,9 @@ north_rule mandate, extending the reference's distinct-set stats
 ids on insert — fine for a 2^16 domain, not for 10^12 doc keys).
 
 Design for scale:
-  * totals (in check_all) via ``approx_count_distinct`` (HyperLogLog++, mergeable
-    partials, no shuffle of the full key set), and
+  * totals (in check_all) via ``hll_sketch_agg`` over a 64-bit pre-hash
+    (a DataSketches HLL: mergeable partials, no shuffle of the full key
+    set), and
   * exact duplicate EXTRACTION via hash-partitioned groupBy — sort-free:
     the map-side partial count + AQE-coalesced shuffle only moves
     (key, count) pairs, never the payload. Skewed hot keys are handled

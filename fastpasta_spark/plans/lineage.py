@@ -21,6 +21,7 @@ from __future__ import annotations
 import os
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,7 +61,9 @@ def completed_buckets(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
     """Buckets already validated in any prior attempt ((bucket) rows)."""
     lin = read_lineage(spark, checkpoint_dir)
     if lin is None:
-        return spark.createDataFrame([], "bucket int")
+        # from Arrow: a LocalRelation, read without a Spark job
+        return spark.createDataFrame(
+            pa.table({"bucket": pa.array([], pa.int32())}), "bucket int")
     return lin.filter(F.col("verdict") == "DONE").select("bucket").distinct()
 
 

@@ -5,17 +5,25 @@ serialized to JSON (`/root/reference/fastpasta/src/stats/
 stats_collector.rs:161-175`), read back and compared field-by-field with
 one error per mismatching field (`stats/lib.rs:9-31` ``validate_fields!``,
 `controller.rs:152-179`). Here the metrics table IS the stats tree, and
-the diff is a full-outer join — exact for counters, tolerance-aware for
-the HLL estimate.
+the diff compares the two ~100-row tables on the driver, field by field
+— exact for counters, tolerance-aware for the HLL estimate.
+
+Small driver-side tables (the golden stats, custom-check expectations,
+the diff's rows) are built from Arrow tables: Spark plans them as a
+LocalRelation, so reading them runs no job. ``createDataFrame(list)``
+would plan an RDD scan with one Python-worker job per action.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
+from collections import defaultdict
 from dataclasses import dataclass
 from dataclasses import field as dataclass_field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,9 +63,17 @@ def read_stats(spark: SparkSession, path: str) -> DataFrame:
     else:
         with open(path) as f:
             d = json.load(f)
-    return spark.createDataFrame(
-        [(k, float(v)) for k, v in sorted(d.items())], schema=S.METRICS_SCHEMA
-    )
+    return _metrics_frame(spark, d)
+
+
+def _metrics_frame(spark: SparkSession, d: dict[str, float]) -> DataFrame:
+    """(name, value) rows sorted by name, METRICS_SCHEMA, as a
+    LocalRelation built from Arrow."""
+    names = sorted(d)
+    return spark.createDataFrame(pa.table({
+        "name": pa.array(names, pa.string()),
+        "value": pa.array([float(d[k]) for k in names], pa.float64()),
+    }), schema=S.METRICS_SCHEMA)
 
 
 def _fmt_metric(c):
@@ -73,30 +89,66 @@ def _fmt_metric(c):
     ).otherwise(c.cast("string"))
 
 
+def _spark_gt(a: float, b: float) -> bool:
+    """Spark's `a > b` on doubles: NaN equals NaN and sorts above every
+    other value (Python's `>` is False whenever a NaN is involved)."""
+    if math.isnan(a):
+        return not math.isnan(b)
+    return not math.isnan(b) and a > b
+
+
+def _outer_pairs(cur: list, gold: list) -> list:
+    """(name, cur, gold) rows of a full-outer equi-join on name of two
+    (name, value) row lists: duplicate names pair up as in a join, a
+    NULL name never matches, an unmatched row gets None on the other
+    side."""
+    gold_by = defaultdict(list)
+    for n, g in gold:
+        if n is not None:
+            gold_by[n].append(g)
+    cur_names = {n for n, _ in cur}
+    out = []
+    for n, c in cur:
+        out += [(n, c, g) for g in gold_by.get(n, [None])]
+    out += [(n, None, g) for n, g in gold if n is None or n not in cur_names]
+    return out
+
+
 def golden_diff(metrics: DataFrame, golden: DataFrame) -> DataFrame:
     """Field-wise diff -> one E130 violation row per mismatching metric.
 
-    Full-outer join on metric name; a field missing on either side is a
-    mismatch, like the reference's per-field validate_fields! errors.
-    No broadcast hint: Spark has no broadcast build side for a full
-    outer equi-join, so it ignores the hint (the plan is a sort-merge
-    join either way) and logs a HintErrorLogger warning per call.
+    A field missing on either side, or NULL on either side, is a
+    mismatch, like the reference's per-field validate_fields! errors;
+    otherwise the values must be equal, or within APPROX_METRICS'
+    relative tolerance of the golden value. Comparisons follow Spark's
+    double semantics (NaN equals NaN and ranks above every value).
+
+    Both tables hold ~100 rows, so they are collected and compared on
+    the driver: one job to read the cached metrics, none for a golden
+    from read_stats. The mismatching (name, current, golden) rows are
+    rendered by a Spark select over an Arrow-built LocalRelation —
+    _fmt_metric, the same render as custom_checks and the SQL oracle —
+    so collecting the result runs no job. The result is sorted by name.
     """
-    cur = metrics.select(F.col("name"), F.col("value").alias("cur"))
-    gold = golden.select(F.col("name"), F.col("value").alias("gold"))
-    j = cur.join(gold, "name", "full_outer")
+    pairs = _outer_pairs(
+        [tuple(r) for r in metrics.select("name", "value").collect()],
+        [tuple(r) for r in golden.select("name", "value").collect()])
 
-    tol = F.lit(0.0)
-    for metric, rtol in APPROX_METRICS.items():
-        tol = F.when(F.col("name") == metric,
-                     F.abs(F.col("gold")) * rtol).otherwise(tol)
+    def mismatch(name, cur, gold) -> bool:
+        if cur is None or gold is None:
+            return True
+        tol = abs(gold) * APPROX_METRICS[name] if name in APPROX_METRICS \
+            else 0.0
+        return _spark_gt(abs(cur - gold), tol)
 
-    mismatch = (
-        F.col("cur").isNull()
-        | F.col("gold").isNull()
-        | (F.abs(F.col("cur") - F.col("gold")) > tol)
-    )
-    return j.filter(mismatch).select(
+    bad = sorted((p for p in pairs if mismatch(*p)),
+                 key=lambda p: (p[0] is None, p[0] or ""))
+    j = metrics.sparkSession.createDataFrame(pa.table({
+        "name": pa.array([p[0] for p in bad], pa.string()),
+        "cur": pa.array([p[1] for p in bad], pa.float64()),
+        "gold": pa.array([p[2] for p in bad], pa.float64()),
+    }), "name string, cur double, gold double")
+    return j.select(
         F.lit(None).cast("string").alias("doc_id"),
         F.lit(None).cast("int").alias("span_idx"),
         F.lit(-1).alias("offset"),
@@ -123,11 +175,8 @@ def custom_checks(metrics: DataFrame, expectations: dict[str, float],
     a missing metric also fails — EXCEPT names in ``absent_is_zero``
     (counter partials that simply never fired: absent means 0 there,
     so an expectation of 0 passes on a corpus with none)."""
-    spark = metrics.sparkSession
-    exp = spark.createDataFrame(
-        [(k, float(v)) for k, v in sorted(expectations.items())],
-        schema=S.METRICS_SCHEMA,
-    ).select(F.col("name"), F.col("value").alias("expected"))
+    exp = _metrics_frame(metrics.sparkSession, expectations).select(
+        F.col("name"), F.col("value").alias("expected"))
     j = exp.join(metrics.withColumnRenamed("value", "actual"), "name", "left")
     if absent_is_zero:
         j = j.withColumn(

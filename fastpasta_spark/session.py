@@ -33,6 +33,28 @@ def _ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zip_path)
 
 
+#: ceiling on the default driver heap (the old fixed default)
+DRIVER_MEM_CAP_GB = 48
+
+
+def default_driver_memory(host_bytes: int | None) -> str:
+    """Default ``spark.driver.memory``: half the host's physical memory,
+    capped at DRIVER_MEM_CAP_GB and floored at 1g. A fixed 48g asked a
+    15 GB host for three times its memory; a local-mode driver is the
+    whole engine, so the other half is left for Python workers and page
+    cache. Unknown host memory keeps the cap."""
+    if not host_bytes:
+        return f"{DRIVER_MEM_CAP_GB}g"
+    return f"{max(1, min(DRIVER_MEM_CAP_GB, host_bytes // 2 // 2**30))}g"
+
+
+def _host_memory_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return None
+
+
 def get_spark(
     app_name: str = "fastpasta_spark",
     cores: int | None = None,
@@ -43,7 +65,8 @@ def get_spark(
 
     cores=None -> local[*]. shuffle_partitions defaults to the core
     count (the default 200 over-parallelizes local/small data; on a
-    real cluster you'd size it to ~2-3x total cores).
+    real cluster you'd size it to ~2-3x total cores). The driver heap is
+    SPARK_DRIVER_MEM, else default_driver_memory() of this host.
     """
     if cores is None:
         env_cores = os.environ.get("SPARK_GRAFT_CPUS")
@@ -70,7 +93,13 @@ def get_spark(
                 os.environ.get("FASTPASTA_CACHE_COMPRESS", "false"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM")
+                or default_driver_memory(_host_memory_bytes()))
+        # a check_all flow generates ~70 classes; with the default
+        # 100-entry cache every warm flow recompiled most of them. A
+        # static conf: it only takes effect when the session is created
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

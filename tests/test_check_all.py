@@ -11,6 +11,8 @@ from fastpasta_spark.plans.check_all import check_all
 from fastpasta_spark.sources.synth import CorpusConfig, corpus_df, media_df
 
 CFG = CorpusConfig(n_docs=400, corrupt_per_mille=250, dup_per_mille=40)
+# compiles a warm check all flow may still pay (see the codegen test)
+WARM_COMPILES_MAX = 12
 
 
 @pytest.fixture(scope="module")
@@ -112,6 +114,63 @@ def test_verdicts_partition_hostile_doc_ids(hostile):
     _assert_verdicts_partition(docs, res)  # 40 keys -> 40 verdict rows
     fails = {r.doc_id for r in res.passed.collect() if r.verdict == "FAIL"}
     assert fails == {None, "\x00null_doc_id", "\x00"}
+
+
+def test_hll_sketch_skips_null_id(hostile):
+    # the distinct-id sketch counts the 39 non-NULL keys (37 synth ids,
+    # "\x00null_doc_id", "\x00"), not the NULL key: at this size the
+    # sketch is exact, so a counted NULL would read 40
+    _, _, res = hostile
+    m = {r.name: r.value for r in res.metrics.collect()}
+    assert m["doc_id_distinct_exact"] == 39
+    assert abs(m["doc_id_distinct_hll"] - 39) / 39 < 0.05
+    assert m["doc_id_distinct_hll"] == 39
+
+
+def test_codegen_cache_holds_a_flow(spark, tmp_path):
+    """get_spark sizes the codegen cache (a static conf) so a warm check
+    all flow reuses the classes the first flow compiled, also after the
+    session compiled 120 unrelated classes in between — more than the
+    default 100-entry cache holds, which then recompiled the whole flow.
+    The few classes a warm flow may still compile are whole-stage
+    classes that AQE numbered differently (codegenStageId follows the
+    order in which query stages finish)."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from fastpasta_spark.plans.report import golden_diff, read_stats, write_stats
+
+    assert spark.sparkContext.getConf().get(
+        "spark.sql.codegen.cache.maxEntries") == "1000"
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    cfg = CorpusConfig(n_docs=300, corrupt_per_mille=100, dup_per_mille=10)
+    docs, media = corpus_df(spark, cfg), media_df(spark, cfg)
+    stats = str(tmp_path / "stats.json")
+
+    def flow() -> int:
+        c0 = compiles.getCount()
+        res = check_all(docs, media)
+        res.violations.write.mode("overwrite").parquet(str(tmp_path / "v"))
+        res.passed.write.mode("overwrite").parquet(str(tmp_path / "p"))
+        write_stats(res.metrics, stats)
+        assert golden_diff(res.metrics, read_stats(spark, stats)).collect() == []
+        res.release()
+        return compiles.getCount() - c0
+
+    flow()
+    second = flow()
+    # two classes per one-row projection, constants no flow uses
+    c0 = compiles.getCount()
+    reduce(DataFrame.unionByName, [
+        spark.range(0, 1, 1, 1).select((F.col("id") * k + k).alias("x"))
+        for k in range(1_000_003, 1_000_063)]).collect()
+    assert compiles.getCount() - c0 >= 120
+    third = flow()
+    assert second <= WARM_COMPILES_MAX and third <= WARM_COMPILES_MAX, \
+        (second, third)
 
 
 def test_error_attribution_counts_null_key_once(hostile):

@@ -225,6 +225,18 @@ def test_kmeans_empty_corpus_raises(spark):
         kmeans_fit(empty, k=4)
 
 
+def test_ivf_topk_empty_corpus(spark):
+    # no centroids: the codebook is an empty (0, 0) matrix, so every
+    # vector lands in no list and there are no neighbours — no raise
+    schema = "vec_id long, embedding array<float>"
+    empty = spark.createDataFrame([], schema)
+    assert similarity.ivf_topk(empty, empty, k=3, n_lists=4,
+                               nprobe=2).collect() == []
+    queries = spark.createDataFrame([(1, [1.0, 0.0]), (2, None)], schema)
+    assert similarity.ivf_topk(empty, queries, k=3, n_lists=4,
+                               nprobe=2).collect() == []
+
+
 def test_kmeans_k_exceeds_corpus(spark):
     # fewer vectors than k: the codebook just has fewer centroids
     from fastpasta_spark.operators.similarity import kmeans_assign
